@@ -481,57 +481,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     return sim
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-) -> DataFrame:
-    """Pairs within Hamming distance ``max_hamming`` of each other.
-
-    Banding: split the 64-bit signature into 4×16-bit bands; any pair
-    with distance ≤ 16/4·… shares at least one exact band w.h.p. —
-    candidates come from equi-joins on (band_id, band_value), then the
-    exact popcount filter. bit_count is built-in (Spark ≥3.3).
-    """
-    sim = simhash(df, text_col, id_col)
-    bands = sim.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftright(F.col("simhash"), b * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", "simhash", "b.band_id", "b.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def simhash_near_duplicates_portable(
     df: DataFrame,
     text_col: str = "text",

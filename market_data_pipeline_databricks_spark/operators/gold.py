@@ -47,17 +47,6 @@ def gold_features(silver: DataFrame, computed_at: datetime | None = None) -> Dat
     )
 
 
-def latest_snapshot(gold: DataFrame) -> DataFrame:
-    """Latest row per symbol — the QUALIFY ROW_NUMBER()=1 pattern (W5)
-    rewritten for OSS Spark (reference sql/example_queries.sql:7-15)."""
-    w = Window.partitionBy("symbol").orderBy(F.desc("date"))
-    return (
-        gold.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
 def gold_incremental(
     silver: DataFrame,
     existing_gold: DataFrame,

@@ -387,44 +387,6 @@ def ann_topk_lsh(
     )
 
 
-def cosine_near_duplicates(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int | None = 8,
-    n_rows: int | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a < id_b, cos ≥ threshold),
-    LSH-bucketed: high-cosine pairs almost surely share a sign bucket
-    (each plane splits them with probability θ/π ≈ 0.1 at cos=0.95).
-    Pass ``n_planes=None`` to grow the plane count with log₂ of corpus
-    size (:func:`lsh_auto_tuning`), holding bucket size — and so the
-    per-bucket quadratic — linear in n; the single-table recall cost of
-    each added plane is the documented trade of this cheap variant (the
-    multitable form below holds recall AND bucket size)."""
-    if n_planes is None:
-        auto_rows = n_rows if n_rows is not None else df.count()
-        n_planes, _ = lsh_auto_tuning(auto_rows, threshold)
-    first = df.select(vec_col).first()
-    dim = len(first[0])
-    planes = random_planes(dim, n_planes, seed)
-    v = df.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-    ).withColumn("bucket", lsh_bucket(F.col("vec"), planes))
-    a, b = v.alias("a"), v.alias("b")
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(cosine(F.col("a.vec"), F.col("b.vec")), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
-
-
 def cosine_near_duplicates_multitable(
     df: DataFrame,
     threshold: float = 0.95,

@@ -30,15 +30,12 @@ from market_data_pipeline_databricks_spark.sources import (
 def run_bronze(
     spark: SparkSession, cfg: PipelineConfig, ingested_at: datetime | None = None
 ) -> DataFrame:
-    raw = read_prices_csv(spark, f"{cfg.raw_dir}/*.csv")
+    raw = read_prices_csv(spark, cfg.raw_dir)
     batch = B.bronze_batch(B.normalize_raw(raw, cfg.source, ingested_at))
     upsert_by_key(
         spark, batch, cfg.warehouse_dir, cfg.bronze_table,
         key_cols=B.BRONZE_KEY,
         partition_cols=schemas.PARTITION_COLS[cfg.bronze_table],
-        # bronze partitions on symbol, which is part of the key: a key
-        # can never change partitions, so skip the prior-partition scan.
-        stable_partitions=True,
     )
     return read_table(spark, cfg.warehouse_dir, cfg.bronze_table)
 

@@ -2,9 +2,10 @@
 parquet — time travel and file-level copy-on-write MERGE from plain
 DataFrame ops.
 
-The Delta/Iceberg core mechanic, rebuilt engine-side because
-delta-spark is uninstallable in this environment (BASELINE.md pip
-record; `sources/writers.py:merge_into_delta` activates when it lands):
+The Delta/Iceberg core mechanic, built from Spark's own parquet reader
+and writer. ``sources/writers.py`` is the other table-write path: it
+swaps rewritten partition directories into a plain parquet table,
+where this format commits manifests over files it never mutates:
 
 - data files are IMMUTABLE — every commit writes new files under
   ``data/commit-<uuid>/`` and never touches existing ones;
@@ -1054,8 +1055,7 @@ def commit_merge_keys(
     The check is one key-column aggregate over the batch (batch-scaled,
     never table-scaled)."""
     from market_data_pipeline_databricks_spark.sources.writers import (
-        _null_safe_anti,
-        _null_safe_semi,
+        _null_safe_join,
     )
 
     _require_absolute(table_dir)
@@ -1088,7 +1088,7 @@ def commit_merge_keys(
     # key — the COW working set, never row-scaled
     affected = [
         r["__file__"]
-        for r in _null_safe_semi(cur, keys, key_cols)
+        for r in _null_safe_join(cur, keys, key_cols, "left_semi")
         .select("__file__")
         .distinct()
         .collect()
@@ -1105,8 +1105,9 @@ def commit_merge_keys(
         f for f in prior_files if prior_resolved[f] in affected_set
     ]
     survivors = (
-        _null_safe_anti(
-            spark.read.parquet(*sorted(affected_set)), keys, key_cols
+        _null_safe_join(
+            spark.read.parquet(*sorted(affected_set)), keys, key_cols,
+            "left_anti",
         )
         if affected_set
         else None

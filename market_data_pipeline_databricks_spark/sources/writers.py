@@ -1,35 +1,41 @@
-"""Table sinks: overwrite, append, idempotent upsert (SURVEY §2.1 S5-S9).
+"""Table sinks: overwrite, append, keyed upsert, keyed erase, compaction
+(SURVEY §2.1 S5-S9).
 
 The reference materializes through Delta Lake: ``MERGE INTO`` for bronze
 (reference 01_ingest_bronze.py:93-107), full overwrite for silver/gold
 (02_transform_silver.py:136-137, 03_aggregate_gold.py:82-95), append for
-the DQ log (04_data_quality_checks.py:147-156). OSS Spark in this
-container has no delta-spark package, so:
+the DQ log (04_data_quality_checks.py:147-156). Here a table is a
+directory of parquet files, partitioned hive-style (``col=value``
+directories), and the MERGE is :func:`upsert_by_key`.
 
-- when ``delta`` is importable, ``upsert_by_key`` uses real
-  ``MERGE INTO`` (update-all-columns-on-match semantics, as the
-  reference does);
-- otherwise a parquet fallback preserves the same semantics:
-  anti-join existing rows against the update batch on the key, union
-  the batch, and rewrite only the *affected partitions* (not the whole
-  table — at 100 TB a full rewrite per daily batch is unacceptable).
+The keyed rewrites — :func:`upsert_by_key`, :func:`erase_keys` and
+:func:`compact_table` — share one path:
 
-Local-FS note: the fallback stages the merged partitions to a temp dir
-then swaps, because lazily re-reading a parquet dir while overwriting it
-corrupts the scan. On a cluster with an object store use
-``partitionOverwriteMode=dynamic`` (set below) which scopes the
-overwrite to partitions present in the incoming frame.
+- the partitions a write touches are computed inside Spark in one
+  rendering, the directory name (:func:`_render`). The same form is
+  compared with the live directories, becomes the literal partition
+  predicate of the existing-table scan, and decides which emptied
+  partitions to remove;
+- the table is read with its partition columns typed by the writer,
+  never inferred from directory names (:func:`_read_live`), so the
+  string cast of a read-back value names its directory again;
+- only the touched partitions are rewritten, to a hidden staging
+  directory, and :func:`_swap_staged` publishes them. It is the only
+  function that deletes or moves a table directory.
 """
 
 from __future__ import annotations
 
 import shutil
 import uuid
+from functools import reduce
+from operator import and_, or_
 from pathlib import Path
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _table_path(warehouse_dir: str, table: str) -> Path:
@@ -56,60 +62,117 @@ def append_table(
     writer.parquet(str(_table_path(warehouse_dir, table)))
 
 
-
-# Hive's directory name for a NULL partition value — both the
-# null-safe semi-joins and the emptied-partition cleanup must render
-# NULL this way or NULL-partition rows become invisible to targeted
-# rewrites (a right-to-erasure call would no-op on them).
+# Hive's directory name for a NULL partition value. Spark writes an
+# empty string to the same directory.
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
+#: literal-predicate cap: past this many touched live partitions the
+#: OR-of-conjunctions plan text outgrows its benefit, and a broadcast
+#: semi-join on the rendered values selects the same rows.
+_MAX_LITERAL_PARTITIONS = 512
 
-def _partition_tuple(row, partition_cols: list[str]) -> tuple[str, ...]:
-    return tuple(
-        _HIVE_NULL if row[c] is None else str(row[c]) for c in partition_cols
+
+def _render(col: Column) -> Column:
+    """A partition value as Spark names its directory: ``cast(col as
+    string)``, with NULL and ``''`` as ``__HIVE_DEFAULT_PARTITION__``.
+    The one rendering behind the touched set, the live-directory
+    comparison, the literal partition predicate and the emptied-
+    partition cleanup."""
+    s = col.cast("string")
+    return F.when(s.isNull() | (s == ""), F.lit(_HIVE_NULL)).otherwise(s)
+
+
+def _touched(frame: DataFrame, partition_cols: list[str]) -> set[tuple[str, ...]]:
+    """Rendered partition tuples of ``frame``: one collect of one small
+    row per partition, never per data row."""
+    rendered = frame.select([_render(F.col(c)).alias(c) for c in partition_cols])
+    return {tuple(r) for r in rendered.distinct().collect()}
+
+
+def _partition_dirs(
+    root: Path, partition_cols: list[str]
+) -> dict[tuple[str, ...], Path]:
+    """Leaf partition directories under ``root``, keyed by their
+    unescaped ``col=value`` names — the rendered tuples."""
+    level = [root]
+    for col in partition_cols:
+        level = [
+            child
+            for d in level
+            for child in d.iterdir()
+            if child.is_dir() and child.name.startswith(f"{col}=")
+        ]
+    return {
+        tuple(unquote(p.split("=", 1)[1]) for p in leaf.relative_to(root).parts): leaf
+        for leaf in level
+    }
+
+
+def _read_live(
+    spark: SparkSession, path: Path, partition_types: dict[str, T.DataType]
+) -> DataFrame:
+    """The table at ``path`` with its partition columns typed as given
+    instead of inferred from directory names. Inference reads
+    ``p=007`` as 7 and a lone ``p=1.0E20`` as a decimal, whose string
+    casts no longer name their directories."""
+    df = spark.read.parquet(str(path))
+    if not partition_types:
+        return df
+    schema = T.StructType([
+        T.StructField(f.name, partition_types.get(f.name, f.dataType))
+        for f in df.schema
+    ])
+    return spark.read.schema(schema).parquet(str(path))
+
+
+def _live_rows(
+    existing: DataFrame,
+    path: Path,
+    partition_cols: list[str],
+    touched: set[tuple[str, ...]],
+) -> DataFrame | None:
+    """Rows of ``existing`` in the touched partitions that have a
+    directory on disk, or None when none has one: a batch of new
+    partitions (a time-ordered stream appending buckets) then merges
+    with nothing and its staged write is a pure write of the batch.
+
+    The selection is a literal predicate over partition columns only,
+    so Catalyst applies it to the partition spec at planning time
+    (``PartitionFilters``) and the scan never lists untouched
+    partitions' files."""
+    merge = sorted(touched & _partition_dirs(path, partition_cols).keys())
+    if not merge:
+        return None
+    if len(merge) <= _MAX_LITERAL_PARTITIONS:
+        return existing.filter(reduce(or_, [
+            reduce(and_, [_render(F.col(c)) == v for c, v in zip(partition_cols, tup)])
+            for tup in merge
+        ]))
+    wanted = existing.sparkSession.createDataFrame(
+        merge, [f"__p_{c}" for c in partition_cols]
     )
+    cond = reduce(and_, [
+        _render(existing[c]) == wanted[f"__p_{c}"] for c in partition_cols
+    ])
+    return existing.join(F.broadcast(wanted), cond, "left_semi")
 
 
-def _fresh(small: DataFrame, cols: list[str]) -> DataFrame:
-    """Re-alias ``small``'s join columns to fresh names (and therefore
-    fresh expression IDs). When ``small`` DERIVES from the left frame —
-    ``erase_keys`` builds its touched-partition set from the table it
-    is erasing — ``df[c]`` and ``small[c]`` resolve to the SAME
-    attribute, the join condition degenerates to the trivially-true
-    ``c <=> c``, and the semi-join silently keeps every partition: the
-    erase stays CORRECT (the staged swap still only replaces touched
-    dirs) but rewrites the whole table into staging — the
-    bounded-rewrite contract broken without an error. Fresh aliases
-    make the condition refer to both sides unconditionally."""
-    return small.select([F.col(c).alias(f"__nss_{c}") for c in cols])
+def _null_safe_join(
+    df: DataFrame, small: DataFrame, cols: list[str], how: str
+) -> DataFrame:
+    """``df`` joined ``how`` (``left_semi`` or ``left_anti``) with the
+    broadcast ``small`` on ``cols``, matching NULL to NULL — a plain
+    ``on=cols`` join would never match a NULL key or partition value.
 
-
-def _null_safe_semi(df: DataFrame, small: DataFrame, cols: list[str]) -> DataFrame:
-    """left-semi join on ``cols`` that also matches NULL = NULL (the
-    plain on=cols join is null-unsafe, silently dropping NULL
-    partitions from the affected set)."""
-    cond = None
-    for c in cols:
-        eq = df[c].eqNullSafe(F.col(f"__nss_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return df.join(F.broadcast(_fresh(small, cols)), cond, "left_semi")
-
-
-def _null_safe_anti(df: DataFrame, small: DataFrame, cols: list[str]) -> DataFrame:
-    """left-anti twin of :func:`_null_safe_semi` — keeps rows with NO
-    null-safe match in ``small`` (so a NULL key CAN be matched and
-    removed)."""
-    cond = None
-    for c in cols:
-        eq = df[c].eqNullSafe(F.col(f"__nss_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return df.join(F.broadcast(_fresh(small, cols)), cond, "left_anti")
-
-
-# Inspection hook for plan-capture tooling (plans/r15): when set to a
-# callable it receives the staged-write frame just before the write
-# executes. No effect in production (None).
-_STAGED_PLAN_HOOK = None
+    ``small``'s columns are re-aliased to fresh names (and so fresh
+    expression IDs). When ``small`` derives from ``df`` — ``erase_keys``
+    locates partitions from the table it erases — ``df[c]`` and
+    ``small[c]`` would otherwise resolve to the same attribute, the
+    condition would degenerate to the trivially true ``c <=> c``, and
+    the join would keep every row without an error."""
+    fresh = small.select([F.col(c).alias(f"__nss_{c}") for c in cols])
+    cond = reduce(and_, [df[c].eqNullSafe(F.col(f"__nss_{c}")) for c in cols])
+    return df.join(F.broadcast(fresh), cond, how)
 
 
 def upsert_by_key(
@@ -119,7 +182,6 @@ def upsert_by_key(
     table: str,
     key_cols: list[str],
     partition_cols: list[str] | None = None,
-    stable_partitions: bool = False,
     null_safe_keys: bool = False,
 ) -> None:
     """Idempotent MERGE-style upsert on ``key_cols`` (S6).
@@ -137,29 +199,18 @@ def upsert_by_key(
     without it a NULL-key state row silently duplicates on every
     upsert and downstream reads double-count the group.
 
-    A key may arrive with a *different* partition value than the row it
-    replaces (e.g. a corrected trade date on a date-partitioned table).
-    By default the old partition is located with a key semi-join against
-    the existing table and rewritten too, so the stale row is removed —
-    one extra scan of the table's key/partition columns. When partition
-    columns are functionally determined by the key (symbol partitioning
-    keyed on symbol — every table this pipeline ships), pass
-    ``stable_partitions=True`` to skip that scan: the batch's own
-    partition values are then provably the only ones affected.
+    Only the touched partitions are rewritten: those of the batch's
+    rows and, unless every partition column is also a key column,
+    those where the batch's keys live now. A key may arrive with a
+    different partition value than the row it replaces (a corrected
+    trade date on a date-partitioned table); the extra scan of the
+    table's key and partition columns finds the old partition so the
+    stale row is removed. A partition column that is a function of
+    the key (a year or bucket of it) belongs in ``key_cols``: matching
+    is unchanged and the scan is skipped.
 
-    Scale shape of the staged write (r15): the touched-partition set is
-    collected once (partition-scaled, never row-scaled) and re-applied
-    to the existing table as a LITERAL partition predicate, so the scan
-    lists only the touched partitions' files (``PartitionFilters`` in
-    the plan) — the former broadcast semi-join read every partition and
-    filtered rows. Touched partitions with no live directory on disk
-    (a time-ordered stream appending new buckets — the common case)
-    need no merge at all: the existing-table scan, the key anti-join
-    and the union drop out of the plan entirely and the staged write is
-    a pure write of ``updates``. ``updates`` itself is persisted for
-    the call's duration: its plan feeds the touched-partition collect,
-    the key anti-join and the staged write, and without the persist a
-    caller's expensive update plan re-executes once per consumer.
+    ``updates`` is persisted for the call: its plan feeds the
+    touched-partition collect, the key anti-join and the staged write.
     """
     path = _table_path(warehouse_dir, table)
     partition_cols = partition_cols or []
@@ -168,197 +219,85 @@ def upsert_by_key(
         overwrite_table(updates, warehouse_dir, table, partition_cols)
         return
 
-    existing = spark.read.parquet(str(path))
+    existing = _read_live(
+        spark, path, {c: updates.schema[c].dataType for c in partition_cols}
+    )
     updates = updates.persist()
     try:
-        _upsert_staged(
-            spark, updates, existing, path, table, key_cols,
-            partition_cols, stable_partitions, null_safe_keys,
-        )
+        key_set = updates.select(*key_cols).distinct()
+        touched, affected = None, existing
+        if partition_cols:
+            parts = updates.select(*partition_cols)
+            if not set(partition_cols) <= set(key_cols):
+                prior = (
+                    _null_safe_join(existing, key_set, key_cols, "left_semi")
+                    if null_safe_keys
+                    else existing.join(F.broadcast(key_set), key_cols, "left_semi")
+                )
+                parts = parts.unionByName(prior.select(*partition_cols))
+            touched = _touched(parts, partition_cols)
+            affected = _live_rows(existing, path, partition_cols, touched)
+
+        merged = updates.select(*existing.columns)
+        if affected is not None:
+            kept = (
+                _null_safe_join(affected, key_set, key_cols, "left_anti")
+                if null_safe_keys
+                else affected.join(key_set, key_cols, "left_anti")
+            )
+            merged = kept.unionByName(merged)
+        _swap_staged(merged, path, partition_cols, touched)
     finally:
         updates.unpersist()
 
 
-#: literal-predicate fallback cap: past this many touched partitions
-#: the OR-of-conjunctions plan text outgrows its benefit — use the
-#: broadcast semi-join instead (same result, row-level filter).
-_MAX_LITERAL_PARTITIONS = 512
-
-
-def _literal_ok(rows, partition_cols: list[str]) -> bool:
-    """True when every touched partition value renders identically via
-    ``str(v)`` (the tuple/dirname form) and Spark's ``cast(col as
-    string)`` — the equivalence the literal partition predicate relies
-    on. str/int/date values round-trip exactly; bool ('True' vs
-    'true'), float (scientific-notation forms) and timestamps do not
-    and fall back to the join path."""
-    import datetime as _dt
-
-    for r in rows:
-        for c in partition_cols:
-            v = r[c]
-            if v is None or isinstance(v, str):
-                continue
-            if isinstance(v, bool) or not isinstance(v, (int, _dt.date)):
-                return False
-            if isinstance(v, _dt.datetime):
-                return False
-    return True
-
-
-def _partition_pred(partition_cols: list[str], tuples):
-    """Static partition predicate for the touched set: OR over tuples
-    of AND over columns, compared on the string rendering (matching
-    ``_partition_tuple`` and the hive dir names — partition type
-    inference may read a day-grain value back as DATE and a bucket as
-    INT; the cast normalizes). References only partition attributes,
-    so Catalyst evaluates it against the partition spec at planning
-    time (``PartitionFilters``) and the scan never lists untouched
-    partitions' files."""
-    pred = F.lit(False)
-    for tup in sorted(tuples):
-        c = None
-        for col, v in zip(partition_cols, tup):
-            e = (
-                F.col(col).isNull()
-                if v == _HIVE_NULL
-                else (F.col(col).cast("string") == F.lit(v))
-            )
-            c = e if c is None else (c & e)
-        pred = pred | c
-    return pred
-
-
-def _upsert_staged(
-    spark: SparkSession,
-    updates: DataFrame,
-    existing: DataFrame,
+def _swap_staged(
+    frame: DataFrame,
     path: Path,
-    table: str,
-    key_cols: list[str],
     partition_cols: list[str],
-    stable_partitions: bool,
-    null_safe_keys: bool,
+    touched: set[tuple[str, ...]] | None,
 ) -> None:
-    touched_tuples: set[tuple[str, ...]] | None = None
-    if partition_cols:
-        # Only partitions touched by the batch need rewriting; the rest
-        # of the table is untouched (scales: daily batch touches a few
-        # symbols out of millions of partitions).
-        touched = updates.select(*partition_cols).distinct()
-        if not stable_partitions:
-            # ...plus the partitions where updated keys CURRENTLY live,
-            # so a key that moved partitions doesn't leave a duplicate
-            # behind. Column-pruned scan: only key+partition columns.
-            upd_keys = updates.select(*key_cols).distinct()
-            prior = (
-                (
-                    _null_safe_semi(existing, upd_keys, key_cols)
-                    if null_safe_keys
-                    else existing.join(
-                        F.broadcast(upd_keys), key_cols, "left_semi"
-                    )
-                )
-                .select(*partition_cols)
-                .distinct()
-            )
-            touched = touched.unionByName(prior).distinct()
-        touched_rows = touched.collect()  # one small row per partition
-        touched_tuples = {
-            _partition_tuple(row, partition_cols) for row in touched_rows
-        }
-        # Partitions with no live directory hold nothing to merge —
-        # drop them from the read side. A time-ordered stream
-        # appending new buckets usually leaves this set empty, and the
-        # staged write then degenerates to a pure write of updates.
-        live = {
-            tuple(
-                unquote(p.split("=", 1)[1])
-                for p in leaf.relative_to(path).parts
-            )
-            for leaf in _leaf_partition_dirs(path, partition_cols)
-        }
-        merge_tuples = touched_tuples & live
-        if not merge_tuples:
-            affected = None
-        elif (
-            _literal_ok(touched_rows, partition_cols)
-            and len(merge_tuples) <= _MAX_LITERAL_PARTITIONS
-        ):
-            affected = existing.filter(
-                _partition_pred(partition_cols, merge_tuples)
-            )
-        else:
-            affected = _null_safe_semi(existing, touched, partition_cols)
-    else:
-        affected = existing
+    """Write ``frame`` to a hidden staging directory beside the table at
+    ``path``, then publish it — the only place a table directory is
+    deleted or moved. Staging is required: overwriting a parquet
+    directory while lazily reading it corrupts the scan.
 
-    if affected is None:
-        merged = updates.select(*existing.columns)
-    else:
-        key_set = updates.select(*key_cols).distinct()
-        kept = (
-            _null_safe_anti(affected, key_set, key_cols)
-            if null_safe_keys
-            else affected.join(key_set, key_cols, "left_anti")
-        )
-        merged = kept.unionByName(updates.select(*existing.columns))
+    Unpartitioned, the staged directory replaces the table. Partitioned,
+    each staged leaf partition replaces its live counterpart, and then
+    every ``touched`` partition that staged no rows (its keys moved or
+    were erased) is removed. Swapping at leaf granularity keeps
+    untouched sibling partitions that share a first-level value.
 
-    if _STAGED_PLAN_HOOK is not None:
-        _STAGED_PLAN_HOOK(merged)
-    staging = path.parent / f".staging_{table}_{uuid.uuid4().hex[:8]}"
-    writer = merged.write.mode("overwrite")
+    The swap is not atomic across partitions: a crash mid-loop leaves
+    some partitions new and some old, each consistent on its own, and
+    re-running the same write heals the table."""
+    staging = path.parent / f".staging_{path.name}_{uuid.uuid4().hex[:8]}"
+    writer = frame.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(str(staging))
-    _swap_staged(staging, path, partition_cols, touched_tuples)
-
-
-def _swap_staged(
-    staging: Path,
-    path: Path,
-    partition_cols: list[str],
-    touched_tuples: set[tuple[str, ...]] | None,
-) -> None:
-    """Swap staged partition dirs into the live table at the full
-    partition-tuple granularity (or the whole table when
-    unpartitioned). Swapping only the top level would delete sibling
-    second-level partitions that share a first-level value but were not
-    touched by this batch. The per-directory swap is not atomic across
-    partitions: a crash mid-loop leaves some partitions updated and
-    some not (each individual partition is still consistent, and
-    re-running the same batch heals the table — asserted in tests); on
-    a cluster use Delta MERGE (below) or partitionOverwriteMode=dynamic
-    for transactional semantics."""
-    if partition_cols:
-        staged = _leaf_partition_dirs(staging, partition_cols)
-        staged_rels = {leaf.relative_to(staging) for leaf in staged}
-        for leaf in staged:
-            dest = path / leaf.relative_to(staging)
-            if dest.exists():
-                shutil.rmtree(dest)
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            shutil.move(str(leaf), str(dest))
-        shutil.rmtree(staging, ignore_errors=True)
-        # A touched partition that ended up with zero rows (its only keys
-        # moved elsewhere or were erased) produces no staging dir —
-        # remove the stale one.
-        for leaf in _leaf_partition_dirs(path, partition_cols):
-            rel = leaf.relative_to(path)
-            vals = tuple(unquote(p.split("=", 1)[1]) for p in rel.parts)
-            if vals in (touched_tuples or set()) and rel not in staged_rels:
-                shutil.rmtree(leaf)
-    else:
+    if not partition_cols:
         shutil.rmtree(path)
         shutil.move(str(staging), str(path))
+        return
+    staged = _partition_dirs(staging, partition_cols)
+    for leaf in staged.values():
+        dest = path / leaf.relative_to(staging)
+        if dest.exists():
+            shutil.rmtree(dest)
+        dest.parent.mkdir(parents=True, exist_ok=True)
+        shutil.move(str(leaf), str(dest))
+    shutil.rmtree(staging, ignore_errors=True)
+    for vals, leaf in _partition_dirs(path, partition_cols).items():
+        if vals in touched and vals not in staged:
+            shutil.rmtree(leaf)
 
 
 def cleanup_staging(warehouse_dir: str, older_than_s: float = 86400.0) -> list[str]:
-    """Remove orphaned staging directories left by a crash mid-swap
-    (``.staging_*`` / ``.erase_*`` / ``.compact_*``). Dot-prefixed dirs
-    are invisible to Spark reads (hidden-path filter), so orphans never
-    corrupt results — they only leak disk — which is why this runs as
-    periodic maintenance rather than on the write path. Only dirs older
+    """Remove orphaned ``.staging_*`` directories left by a crash between
+    staging and swap. Public maintenance API, deliberately kept off the
+    write path: dot-prefixed dirs are invisible to Spark reads, so an
+    orphan only leaks disk and never corrupts results. Only dirs older
     than ``older_than_s`` are removed, so an in-flight writer's staging
     area is never yanked. Returns the removed paths."""
     import time
@@ -369,11 +308,7 @@ def cleanup_staging(warehouse_dir: str, older_than_s: float = 86400.0) -> list[s
         return removed
     cutoff = time.time() - older_than_s
     for d in root.iterdir():
-        if not d.is_dir():
-            continue
-        if not d.name.startswith((".staging_", ".erase_", ".compact_")):
-            continue
-        if d.stat().st_mtime < cutoff:
+        if d.is_dir() and d.name.startswith(".staging_") and d.stat().st_mtime < cutoff:
             shutil.rmtree(d, ignore_errors=True)
             removed.append(str(d))
     return removed
@@ -400,60 +335,31 @@ def erase_keys(
     many rows were erased) comes from partition-local counts of the
     same frames the rewrite uses — no extra full scan.
 
-    Every key comparison here is NULL-SAFE (eqNullSafe), matching the
-    deliberately null-safe partition matching: with plain equality a
-    row whose key columns contain NULL could never be erased — a
-    silent no-op in a right-to-erasure operator (round-4 advice).
+    Every key comparison here is NULL-SAFE (eqNullSafe): with plain
+    equality a row whose key columns contain NULL could never be
+    erased — a silent no-op in a right-to-erasure operator.
     """
     path = _table_path(warehouse_dir, table)
     partition_cols = partition_cols or []
     if not path.exists():
         return 0
-    existing = spark.read.parquet(str(path))
+    existing = _read_live(spark, path, {c: T.StringType() for c in partition_cols})
     key_set = keys.select(*key_cols).distinct()
 
+    touched, affected = None, existing
     if partition_cols:
-        prior = (
-            _null_safe_semi(existing, key_set, key_cols)
-            .select(*partition_cols)
-            .distinct()
-        )
-        touched_tuples = {
-            _partition_tuple(row, partition_cols)
-            for row in prior.collect()
-        }
-        if not touched_tuples:
+        prior = _null_safe_join(existing, key_set, key_cols, "left_semi")
+        touched = _touched(prior, partition_cols)
+        affected = _live_rows(existing, path, partition_cols, touched)
+        if affected is None:
             return 0
-        affected = _null_safe_semi(existing, prior, partition_cols)
-    else:
-        touched_tuples = None
-        affected = existing
 
-    kept = _null_safe_anti(affected, key_set, key_cols)
+    kept = _null_safe_join(affected, key_set, key_cols, "left_anti")
     removed = affected.count() - kept.count()
     if removed == 0:
         return 0
-
-    staging = path.parent / f".erase_{table}_{uuid.uuid4().hex[:8]}"
-    writer = kept.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(str(staging))
-    _swap_staged(staging, path, partition_cols, touched_tuples)
+    _swap_staged(kept, path, partition_cols, touched)
     return removed
-
-
-def _leaf_partition_dirs(root: Path, partition_cols: list[str]) -> list[Path]:
-    """Descend ``col=value`` directory levels to the deepest partition dirs."""
-    level = [root]
-    for col in partition_cols:
-        level = [
-            child
-            for d in level
-            for child in d.iterdir()
-            if child.is_dir() and child.name.startswith(f"{col}=")
-        ]
-    return level
 
 
 def compact_table(
@@ -480,104 +386,39 @@ def compact_table(
     import math
 
     path = _table_path(warehouse_dir, table)
-    df = spark.read.parquet(str(path))
     partition_cols = partition_cols or []
+    df = _read_live(spark, path, {c: T.StringType() for c in partition_cols})
 
-    def _dir_bytes(d: Path) -> int:
-        return sum(f.stat().st_size for f in d.rglob("*.parquet"))
+    def _n_files(d: Path) -> int:
+        size = sum(f.stat().st_size for f in d.rglob("*.parquet"))
+        return max(1, math.ceil(size / target_file_bytes))
 
-    staging = path.parent / f".compact_{table}_{uuid.uuid4().hex[:8]}"
+    touched = None
     if partition_cols:
-        buckets = [
-            (
-                *(unquote(p.split("=", 1)[1]) for p in leaf.relative_to(path).parts),
-                max(1, math.ceil(_dir_bytes(leaf) / target_file_bytes)),
-            )
-            for leaf in _leaf_partition_dirs(path, partition_cols)
-        ]
+        live = _partition_dirs(path, partition_cols)
+        bcols = [f"__b_{c}" for c in partition_cols]
         bmap = spark.createDataFrame(
-            buckets, [*partition_cols, "__n_buckets__"]
+            [(*vals, _n_files(leaf)) for vals, leaf in live.items()],
+            [*bcols, "__n_buckets__"],
         )
-        # partition cols parse as strings from dir names; align types
-        for c in partition_cols:
-            bmap = bmap.withColumn(c, F.col(c).cast(df.schema[c].dataType))
+        cond = reduce(and_, [
+            _render(df[c]) == bmap[b] for c, b in zip(partition_cols, bcols)
+        ])
         data_cols = [c for c in df.columns if c not in partition_cols]
-        salted = (
-            df.join(F.broadcast(bmap), partition_cols)
+        df = (
+            df.join(F.broadcast(bmap), cond)
             .withColumn(
                 "__salt__",
                 F.pmod(F.xxhash64(*data_cols), F.col("__n_buckets__")),
             )
             .repartition(*partition_cols, "__salt__")
-            .drop("__n_buckets__", "__salt__")
+            .drop(*bcols, "__n_buckets__", "__salt__")
         )
-        salted.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            str(staging)
-        )
+        touched = set(live)
     else:
-        n = max(1, math.ceil(_dir_bytes(path) / target_file_bytes))
-        df.repartition(n).write.mode("overwrite").parquet(str(staging))
-
-    shutil.rmtree(path)
-    shutil.move(str(staging), str(path))
+        df = df.repartition(_n_files(path))
+    _swap_staged(df, path, partition_cols, touched)
     return len(list(path.rglob("*.parquet")))
-
-
-def merge_into_delta(
-    spark: SparkSession,
-    updates: DataFrame,
-    table: str,
-    key_cols: list[str],
-) -> bool:
-    """Real Delta ``MERGE INTO`` when delta-spark is installed; returns
-    False (caller should use :func:`upsert_by_key`) when it is not."""
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-    except ImportError:
-        return False
-    target = DeltaTable.forName(spark, table)
-    cond = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-    (
-        target.alias("t")
-        .merge(updates.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return True
-
-
-def overwrite_partitions_dynamic(
-    df: DataFrame,
-    warehouse_dir: str,
-    table: str,
-    partition_cols: list[str],
-) -> None:
-    """Partition-scoped overwrite (``partitionOverwriteMode=dynamic``):
-    replace ONLY the partitions present in ``df``, leave every other
-    partition's files untouched — the standard backfill/restatement
-    write (re-run one day or one symbol without rewriting the table).
-
-    This is the built-in counterpart of :func:`upsert_by_key`'s manual
-    partition swap for the whole-partition-replacement case: when the
-    incoming frame IS the new truth for its partitions, no key
-    anti-join is needed and the dynamic writer does the bounded
-    rewrite natively (object-store safe; no read-own-table hazard
-    because nothing is read). Keyed merges still need the upsert.
-
-    The mode is passed as a per-write option so the session default
-    (static) is untouched for other writers."""
-    if not partition_cols:
-        raise ValueError(
-            "dynamic partition overwrite requires partition columns — "
-            "for unpartitioned tables use overwrite_table"
-        )
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(str(_table_path(warehouse_dir, table)))
-    )
 
 
 def append_with_schema_evolution(

@@ -302,8 +302,9 @@ def ddl(spark: SparkSession, text: str) -> DataFrame:
     notebooks). On OSS Spark without the delta-spark extension that
     format is unknown, so this shim rewrites the top-level
     ``USING DELTA`` clause to ``USING PARQUET`` — identical columnar
-    layout and partitioning; transactional upserts then route through
-    ``sources/writers.upsert_by_key``'s exact partition-swap fallback.
+    layout and partitioning; keyed upserts into the table go through
+    :func:`merge`, which rewrites only the touched partitions
+    (``sources/writers.upsert_by_key``).
     When delta-spark IS importable the statement passes through
     unchanged. The scan respects string literals / quoted identifiers
     / comments (same scanner as the QUALIFY rewrite), so a table or
@@ -414,9 +415,9 @@ def merge(
     ``spark.sql`` untouched. Without it (this container: no network
     route to install it), the statement is parsed — same documented
     subset the reference uses — and executed with IDENTICAL semantics
-    through the engine's exact parquet upsert
-    (``sources/writers.upsert_by_key``: partition-swap, idempotent,
-    null-safe partition handling), reading the source from the
+    through the engine's parquet upsert
+    (``sources/writers.upsert_by_key``: idempotent, rewrites only the
+    partitions the batch touches), reading the source from the
     registered temp view exactly as the notebook does.
 
     Restrictions (ValueError otherwise, so silent divergence is
@@ -427,7 +428,7 @@ def merge(
     a MERGE error in Delta; the same grain check is the caller's
     contract here (the reference dedups upstream).
 
-    ``warehouse_dir`` locates the parquet table for the fallback path
+    ``warehouse_dir`` locates the parquet table for the parquet path
     (the reference's catalog namespace maps to the warehouse dir).
     Returns the post-merge table as a DataFrame.
     """

@@ -93,15 +93,6 @@ def _nbuckets_col(group_expr, n_buckets: int):
     ).cast("int")
 
 
-def _state_cols(group_cols: list[str], sum_cols: list[str]) -> list[str]:
-    return (
-        list(group_cols)
-        + ["__n"]
-        + [f"__sum_{c}" for c in sum_cols]
-        + ["__wm"]
-    )
-
-
 def stream_agg_maintenance(
     events_stream: DataFrame,
     warehouse_dir: str,
@@ -211,9 +202,8 @@ def stream_agg_maintenance(
                 .withColumn("__p_bucket", _nbuckets_col(F.col(gcol), n_buckets))
             )
             upsert_by_key(
-                spark, state, warehouse_dir, table, [gcol],
-                ["__p_bucket"], stable_partitions=True,
-                null_safe_keys=True,
+                spark, state, warehouse_dir, table, [gcol, "__p_bucket"],
+                ["__p_bucket"], null_safe_keys=True,
             )
             return
         # state rows for the BATCH's groups only: the read prunes to
@@ -331,9 +321,8 @@ def stream_agg_maintenance(
             ),
             warehouse_dir,
             table,
-            [gcol],
+            [gcol, "__p_bucket"],
             ["__p_bucket"],
-            stable_partitions=True,
             null_safe_keys=True,
         )
 
@@ -419,8 +408,7 @@ def repair_group_aggregates(
         ),
         warehouse_dir,
         table,
-        [gcol],
+        [gcol, "__p_bucket"],
         ["__p_bucket"],
-        stable_partitions=True,
         null_safe_keys=True,
     )

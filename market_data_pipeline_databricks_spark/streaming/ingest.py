@@ -69,7 +69,6 @@ def stream_upsert_to_table(
     table: str,
     key_cols: list[str],
     partition_cols: list[str] | None = None,
-    stable_partitions: bool = False,
     checkpoint_dir: str | None = None,
 ) -> None:
     """Streaming MERGE: land a stream into a keyed table via
@@ -101,7 +100,6 @@ def stream_upsert_to_table(
             table,
             key_cols,
             partition_cols,
-            stable_partitions=stable_partitions,
         )
 
     q = (
@@ -179,7 +177,8 @@ def stream_gold_maintenance(
     touch (Delta MERGE rewrites the matched files — same shape).
     ``partition_by_year=True`` partitions BOTH tables by a derived
     ``p_year = year(date)`` column (functionally determined by the
-    (symbol, date) key, so ``stable_partitions`` skips the prior-scan)
+    (symbol, date) key, so it joins the upsert key and the prior-scan
+    is skipped)
     — a daily batch then rewrites O(touched years), not the whole
     history. Measured at sf0.1 (BASELINE.md round-8): a one-day late
     patch against 7 years of accumulated history (533k silver rows)
@@ -230,7 +229,8 @@ def stream_gold_maintenance(
         # recompute runs downstream. Upserting on the grain makes the
         # whole sink idempotent end to end (and late corrections to an
         # already-seen (symbol, date) restate cleanly).
-        pcols = ["p_year"] if partition_by_year else None
+        pcols = ["p_year"] if partition_by_year else []
+        key = ["symbol", "date", *pcols]
 
         def _p(df: DataFrame) -> DataFrame:
             # derived partition column, added only at the sink boundary
@@ -246,9 +246,8 @@ def stream_gold_maintenance(
             _p(batch),
             warehouse_dir,
             silver_table,
-            ["symbol", "date"],
+            key,
             pcols,
-            stable_partitions=partition_by_year,
         )
         silver = read_table(spark, warehouse_dir, silver_table)
         if partition_by_year:
@@ -265,9 +264,8 @@ def stream_gold_maintenance(
             _p(fresh),
             warehouse_dir,
             gold_table,
-            ["symbol", "date"],
+            key,
             pcols,
-            stable_partitions=partition_by_year,
         )
 
     q = (

@@ -346,7 +346,7 @@ def stream_rank_maintenance(
     auto_checkpoint = checkpoint_dir is None
     if auto_checkpoint:
         checkpoint_dir = tempfile.mkdtemp(prefix=f"ckpt_rank_{table}_")
-    pcols = ["__p_month"] if partition_by_month else None
+    pcols = ["__p_month"] if partition_by_month else []
     # per-run memos (reset with every start(), which is what makes
     # them safe): [0] the table passed the cache size floor — growth
     # under this sink is monotone, so never re-list after passing;
@@ -587,9 +587,8 @@ def stream_rank_maintenance(
             _p(ranked),
             warehouse_dir,
             table,
-            [id_col],
+            [id_col, *pcols],
             pcols,
-            stable_partitions=partition_by_month,
         )
         # cache update AFTER the upsert: new counts = (all keys' rows
         # at ts < bmin — the offsets frame) + this batch's rows, at
@@ -806,7 +805,6 @@ def repair_ranks(
         reranked,
         warehouse_dir,
         table,
-        [id_col],
+        [id_col, "__p_month"] if partition_by_month else [id_col],
         ["__p_month"] if partition_by_month else None,
-        stable_partitions=partition_by_month,
     )

@@ -44,11 +44,7 @@ BOUNDED_COLLECTS = {
         1,
         "M-step stats: groupBy(cluster, dim) aggregate -> k*dim rows",
     ),
-    ("sources/writers.py", "_upsert_staged"): (
-        1,
-        "one row per touched partition (distinct partition tuples)",
-    ),
-    ("sources/writers.py", "erase_keys"): (
+    ("sources/writers.py", "_touched"): (
         1,
         "one row per touched partition (distinct partition tuples)",
     ),

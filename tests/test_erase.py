@@ -137,7 +137,7 @@ def test_erase_keys_null_partition_value(spark, tmp_path):
 
 def test_upsert_null_partition_key_move(spark, tmp_path):
     """A key moving OUT of a NULL partition must not leave its stale
-    row behind (the null-unsafe join bug erased by _null_safe_semi)."""
+    row behind (the null-unsafe join bug the null-safe semi-join fixed)."""
     from market_data_pipeline_databricks_spark.sources.writers import (
         upsert_by_key,
     )
@@ -172,46 +172,6 @@ def test_erase_keys_null_key_value(spark, tmp_path):
     assert sorted(r.user_id for r in back.collect()) == [2, 3]
     # idempotent: nothing left to erase
     assert erase_keys(spark, wh, "t", keys, ["user_id"], ["symbol"]) == 0
-
-
-def test_dynamic_partition_overwrite_touches_only_incoming(spark, tmp_path):
-    """overwrite_partitions_dynamic replaces exactly the partitions in
-    the incoming frame: replaced partition has new content, absent
-    partitions keep their files byte-identical (inode-stable)."""
-    from market_data_pipeline_databricks_spark.sources.writers import (
-        overwrite_partitions_dynamic,
-    )
-
-    wh = str(tmp_path)
-    overwrite_table(_table(spark), wh, "t", ["symbol"])
-    before = _files(f"{wh}/t")
-
-    restated = spark.createDataFrame(
-        [(9, "AAA", 99)], "user_id long, symbol string, v long"
-    )
-    overwrite_partitions_dynamic(restated, wh, "t", ["symbol"])
-
-    back = spark.read.parquet(f"{wh}/t")
-    rows = {(r.symbol, r.user_id) for r in back.collect()}
-    # AAA fully replaced; BBB/CCC/DDD untouched
-    assert ("AAA", 9) in rows and ("AAA", 1) not in rows
-    assert ("BBB", 1) in rows and ("CCC", 4) in rows and ("DDD", 5) in rows
-
-    after = _files(f"{wh}/t")
-    untouched_before = {k: v for k, v in before.items() if "symbol=AAA" not in k}
-    untouched_after = {k: v for k, v in after.items() if "symbol=AAA" not in k}
-    assert untouched_before == untouched_after  # same files, same inodes
-
-
-def test_dynamic_overwrite_requires_partitions(spark, tmp_path):
-    import pytest
-
-    from market_data_pipeline_databricks_spark.sources.writers import (
-        overwrite_partitions_dynamic,
-    )
-
-    with pytest.raises(ValueError, match="requires partition columns"):
-        overwrite_partitions_dynamic(_table(spark), str(tmp_path), "t", [])
 
 
 def test_append_with_schema_evolution(spark, tmp_path):

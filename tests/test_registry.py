@@ -120,3 +120,16 @@ def test_every_query_runnable_signature():
     # registration of partials/strings at import time.
     for name, fn in registry.all_queries().items():
         assert callable(fn), name
+
+
+def test_readme_query_counts_match_registry():
+    import re
+    from pathlib import Path
+
+    text = " ".join((Path(__file__).parents[1] / "README.md").read_text().split())
+    n_queries = len(registry.all_queries())
+    n_oracle = len(registry.all_oracle_sql())
+    m = re.search(r"(\d+) of (\d+) registered queries value-match", text)
+    assert m and (int(m[1]), int(m[2])) == (n_oracle, n_queries), m
+    m = re.search(r"`queries\(\)` \((\d+) named builders, (\d+) DuckDB", text)
+    assert m and (int(m[1]), int(m[2])) == (n_queries, n_oracle), m

@@ -34,7 +34,7 @@ def _rows(df, cols):
 def test_stream_csv_ingest_matches_batch_bronze(spark, raw_dir):
     stream = read_price_csv_stream(spark, str(raw_dir), source="test")
     got = run_available_now(stream, "t_stream_bronze", output_mode="append")
-    batch = normalize_raw(read_prices_csv(spark, f"{raw_dir}/*.csv"), source="test")
+    batch = normalize_raw(read_prices_csv(spark, str(raw_dir)), source="test")
     cols = ["symbol", "date", "open", "high", "low", "close", "volume"]
     assert _rows(got, cols) == _rows(batch, cols)
     assert got.filter("symbol = 'EURUSD' AND volume IS NOT NULL").count() == 0
@@ -95,13 +95,13 @@ def test_stream_upsert_foreachbatch_idempotent(spark, tmp_path):
         stream = read_price_csv_stream(spark, str(drop_dir), source="test")
         stream_upsert_to_table(
             stream, wh, "bronze_stream", key_cols=["symbol", "date"],
-            partition_cols=["symbol"], stable_partitions=True,
+            partition_cols=["symbol"],
             checkpoint_dir=str(tmp_path / ckpt),
         )
         return _rows(spark.read.parquet(f"{wh}/bronze_stream"), cols)
 
     first = run(raw, "ckpt1")
-    batch = normalize_raw(read_prices_csv(spark, f"{raw}/*.csv"), source="test")
+    batch = normalize_raw(read_prices_csv(spark, str(raw)), source="test")
     assert first == _rows(batch, cols)
     # replay with a fresh checkpoint: value-idempotent, table unchanged
     assert run(raw, "ckpt2") == first
