@@ -69,8 +69,9 @@ def bronze_batch(df: DataFrame) -> DataFrame:
     """Key filter + in-batch dedup (reference :64-68).
 
     ``dropDuplicates`` keeps an arbitrary row within the batch, matching
-    reference semantics; the deterministic latest-wins dedup happens in
-    silver (operators.silver.dedup_latest).
+    reference semantics. Across batches ``upsert_by_key`` replaces a
+    matched key, so bronze stays unique on ``(symbol, date)`` — the
+    invariant silver's one-pass split relies on.
     """
     return (
         df.filter(F.col("symbol").isNotNull() & (F.col("symbol") != "") & F.col("date").isNotNull())

@@ -1,7 +1,9 @@
-"""Silver stage: latest-wins dedup + validation + reject routing.
+"""Silver stage: validation + reject routing, and a latest-wins dedup.
 
 Re-expresses reference notebooks/silver/02_transform_silver.py:
-- ROW_NUMBER latest-wins dedup over (symbol,date)  (:36-42)
+- ROW_NUMBER latest-wins dedup over (symbol,date)  (:36-42), which the
+  pipeline needs no more: bronze is unique on (symbol, date)
+  (``split_silver``)
 - validity predicates  (:51-76)
 - first-match-wins reject_reason CASE  (:80-87)
 - valid/reject split  (:89-95)
@@ -87,13 +89,22 @@ def with_reject_reason(df: DataFrame) -> DataFrame:
 
 
 def split_silver(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, rejected) split after dedup — Q5 reject routing.
+    """(valid, rejected) split of bronze — Q5 reject routing.
 
-    Returns two lazily-evaluated frames off one tagged plan; callers
-    that materialize both should cache the tagged frame to avoid
-    recomputing the dedup shuffle twice.
+    Bronze is unique on ``(symbol, date)``: ``bronze_batch`` drops NULL
+    and duplicate keys and ``upsert_by_key`` replaces a matched key. A
+    silver row therefore depends only on the bronze row of its key, and
+    the split is one shuffle-free pass with no latest-wins dedup
+    (``dedup_latest`` stays for inputs that may repeat a key).
+
+    Both frames are lazy filters of one tagged plan, so each write
+    scans bronze again. Do not cache the tagged frame to save that
+    scan: Spark matches a cache by plan, so a cache left in place
+    serves a later run over the same bronze path its old rows (the
+    daily benchmark's silver stopped growing after the first batch),
+    and under adaptive execution each cached scan costs one more job.
     """
-    tagged = with_reject_reason(dedup_latest(df))
+    tagged = with_reject_reason(df)
     valid = tagged.filter(F.col("reject_reason").isNull()).drop("reject_reason")
     rejected = tagged.filter(F.col("reject_reason").isNotNull())
     return valid, rejected

@@ -9,8 +9,11 @@ independently (e.g. re-ingest a backfill batch, then rebuild downstream).
 from __future__ import annotations
 
 from datetime import date, datetime
+from functools import reduce
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from market_data_pipeline_databricks_spark import schemas
 from market_data_pipeline_databricks_spark.config import PipelineConfig
@@ -25,6 +28,7 @@ from market_data_pipeline_databricks_spark.sources import (
     read_table,
     upsert_by_key,
 )
+from market_data_pipeline_databricks_spark.sources.writers import coalesce_by_bytes
 
 
 def run_bronze(
@@ -41,7 +45,16 @@ def run_bronze(
 
 
 def run_silver(spark: SparkSession, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+    """Rebuild silver and rejected from bronze in one shuffle-free pass
+    each. No dedup: bronze is unique on ``(symbol, date)``, because
+    ``bronze_batch`` drops NULL and duplicate keys and the bronze upsert
+    replaces a matched key (``operators/silver.py:split_silver``).
+
+    The scan is coalesced by bronze's bytes (``coalesce_by_bytes``):
+    once appends have given a symbol several bronze files, the scan's
+    splits would otherwise write one silver file per symbol and split."""
     bronze_df = read_table(spark, cfg.warehouse_dir, cfg.bronze_table)
+    bronze_df = coalesce_by_bytes(bronze_df, [Path(cfg.table_path(cfg.bronze_table))])
     valid, rejected = S.split_silver(bronze_df)
     overwrite_table(valid, cfg.warehouse_dir, cfg.silver_table,
                     schemas.PARTITION_COLS[cfg.silver_table])
@@ -69,14 +82,22 @@ def run_quality(
     run_ts: datetime | None = None,
     today: date | None = None,
 ) -> DataFrame:
-    silver_df = read_table(spark, cfg.warehouse_dir, cfg.silver_table)
-    gold_df = read_table(spark, cfg.warehouse_dir, cfg.gold_table)
-    bronze_df = read_table(spark, cfg.warehouse_dir, cfg.bronze_table)
-    counts = {
-        "bronze": bronze_df.count(),
-        "silver": silver_df.count(),
-        "gold": gold_df.count(),
+    tables = {
+        layer: read_table(spark, cfg.warehouse_dir, name)
+        for layer, name in (
+            ("bronze", cfg.bronze_table),
+            ("silver", cfg.silver_table),
+            ("gold", cfg.gold_table),
+        )
     }
+    silver_df, gold_df = tables["silver"], tables["gold"]
+    # the three row counts in one aggregate job over the union
+    tagged = reduce(DataFrame.unionByName, [
+        df.select(F.lit(layer).alias("layer")) for layer, df in tables.items()
+    ])
+    counts = tagged.agg(*[
+        F.count_if(F.col("layer") == layer).alias(layer) for layer in tables
+    ]).first().asDict()
     dq = Q.run_quality(
         silver_df, gold_df, counts,
         run_ts=run_ts, today=today, thresholds=cfg.thresholds, spark=spark,

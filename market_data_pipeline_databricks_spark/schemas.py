@@ -82,8 +82,8 @@ PARTITION_COLS = {
     "data_quality_checks": ["layer"],
 }
 
-# Declared schema per table — the read-back fallback for empty
-# partitioned tables (parquet writes no data files for them).
+# Declared schema per table: ``sources/tables.py:read_table`` scans the
+# table with it, so no read infers a schema or a partition type.
 TABLE_SCHEMAS = {
     "bronze_prices": BRONZE_SCHEMA,
     "silver_prices_daily": SILVER_SCHEMA,
@@ -91,3 +91,10 @@ TABLE_SCHEMAS = {
     "gold_market_features_daily": GOLD_SCHEMA,
     "data_quality_checks": DQ_SCHEMA,
 }
+
+
+def partitions_last(schema: T.StructType, partition_cols: list[str]) -> T.StructType:
+    """``schema`` in the column order a scan of a table partitioned by
+    ``partition_cols`` returns: data columns, then partition columns."""
+    rest = [f for f in schema.fields if f.name not in partition_cols]
+    return T.StructType(rest + [schema[c] for c in partition_cols])

@@ -7,9 +7,7 @@ Reference behavior re-expressed (01_ingest_bronze.py:23-36):
 
 Scale notes: the reference uses ``inferSchema`` (an extra full pass over
 the input — wrong at 100 TB); we read with an explicit all-string schema
-and cast once. Column-name matching is case-insensitive and the Volume
-column may be absent entirely (FX exports) — handled downstream in
-``operators.bronze.normalize_raw``.
+and cast once in ``operators.bronze.normalize_raw``.
 """
 
 from __future__ import annotations
@@ -17,10 +15,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from market_data_pipeline_databricks_spark.schemas import RAW_CSV_SCHEMA
+
 
 def read_prices_csv(spark: SparkSession, raw_dir: str) -> DataFrame:
     """Read the raw OHLCV CSVs in ``raw_dir``; attach ``input_file``
     provenance.
+
+    Every file is read by position under ``schemas.RAW_CSV_SCHEMA``, the
+    superset header, as the streaming ingest reads it: an FX file's
+    missing Volume column reads as NULL. Without the schema Spark takes
+    one file's header for all files, so an FX file read first dropped
+    the Volume of every equity file in the batch.
 
     The directory is read with a ``*.csv`` file filter rather than as a
     ``{raw_dir}/*.csv`` path glob: the glob sends Spark's streaming-sink
@@ -32,7 +38,8 @@ def read_prices_csv(spark: SparkSession, raw_dir: str) -> DataFrame:
     undefined under some AQE/file-coalescing plans.
     """
     df = (
-        spark.read.option("header", "true")
+        spark.read.schema(RAW_CSV_SCHEMA)
+        .option("header", "true")
         # Permissive: malformed rows become nulls and are routed to the
         # reject table by silver validation instead of failing the scan.
         .option("mode", "PERMISSIVE")

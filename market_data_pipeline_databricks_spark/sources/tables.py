@@ -78,23 +78,20 @@ TESTDATA_TABLES = (
 def read_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
     """Scan a materialized table from the warehouse directory.
 
-    An EMPTY partitioned table writes no parquet data files (only
-    _SUCCESS), so schema inference fails — e.g. the rejected table on a
-    clean run. Fall back to the declared table schema (schemas.py) and
-    return an empty frame; unknown tables re-raise.
+    A table with a declared schema (``schemas.TABLE_SCHEMAS``) is read
+    with it, partition columns last, so the scan runs no schema-
+    inference job, an empty table (no data files) reads as empty, and
+    a partition value keeps its declared type: inference would read a
+    symbol ``007`` back as the integer 7. Other tables are inferred.
     """
-    from pyspark.errors import AnalysisException
+    from market_data_pipeline_databricks_spark import schemas
 
     path = str(Path(warehouse_dir) / table)
-    try:
+    schema = schemas.TABLE_SCHEMAS.get(table)
+    if schema is None:
         return spark.read.parquet(path)
-    except AnalysisException:
-        from market_data_pipeline_databricks_spark import schemas
-
-        schema = schemas.TABLE_SCHEMAS.get(table)
-        if schema is None:
-            raise
-        return spark.createDataFrame([], schema)
+    schema = schemas.partitions_last(schema, schemas.PARTITION_COLS.get(table, []))
+    return spark.read.schema(schema).parquet(path)
 
 
 def testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

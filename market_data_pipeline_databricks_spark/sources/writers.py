@@ -8,7 +8,7 @@ the DQ log (04_data_quality_checks.py:147-156). Here a table is a
 directory of parquet files, partitioned hive-style (``col=value``
 directories), and the MERGE is :func:`upsert_by_key`.
 
-The keyed rewrites — :func:`upsert_by_key`, :func:`erase_keys` and
+The keyed writes — :func:`upsert_by_key`, :func:`erase_keys` and
 :func:`compact_table` — share one path:
 
 - the partitions a write touches are computed inside Spark in one
@@ -17,11 +17,30 @@ The keyed rewrites — :func:`upsert_by_key`, :func:`erase_keys` and
   predicate of the existing-table scan, and decides which emptied
   partitions to remove;
 - the table is read with its partition columns typed by the writer,
-  never inferred from directory names (:func:`_read_live`), so the
-  string cast of a read-back value names its directory again;
-- only the touched partitions are rewritten, to a hidden staging
+  never inferred from directory names, so the string cast of a
+  read-back value names its directory again. The upsert reads it with
+  the batch's schema; erase and compaction, which know no schema, read
+  it through :func:`_read_live`;
+- only the touched partitions are written, to a hidden staging
   directory, and :func:`_swap_staged` publishes them. It is the only
   function that deletes or moves a table directory.
+
+An upsert appends where it can. Its probe finds the touched partitions
+that hold a batch key; only those are rewritten. Every other touched
+partition gets the batch's rows as new files, moved in beside its live
+ones, unless it already holds ``_MAX_PARTITION_FILES`` files: then it is
+rewritten, which compacts it.
+
+Failure semantics (:func:`_swap_staged`): publishing is a sequence of
+renames of whole staged files and directories, not atomic across them.
+A crash mid-publish leaves whole files, some partitions or files with
+the batch's rows and some without, and an orphaned staging directory
+that :func:`cleanup_staging` removes. Re-running the same write heals
+the table: a batch key that was published makes its partition a
+rewrite, which replaces the row, and the rest append as before. The
+one gap is a replaced partition caught between its two renames (old
+aside, new in): it is missing until restored from the staging
+directory.
 """
 
 from __future__ import annotations
@@ -36,6 +55,8 @@ from urllib.parse import unquote
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from market_data_pipeline_databricks_spark.schemas import partitions_last
 
 
 def _table_path(warehouse_dir: str, table: str) -> Path:
@@ -66,6 +87,14 @@ def append_table(
 # empty string to the same directory.
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
+#: files a partition may hold before an append rewrites it instead: each
+#: batch that adds rows without touching a live key adds a file, and a
+#: scan pays per file.
+_MAX_PARTITION_FILES = 8
+
+#: live bytes one rewrite task reads: the session's default split size
+_TASK_BYTES = 128 * 1024 * 1024
+
 #: literal-predicate cap: past this many touched live partitions the
 #: OR-of-conjunctions plan text outgrows its benefit, and a broadcast
 #: semi-join on the rendered values selects the same rows.
@@ -82,11 +111,18 @@ def _render(col: Column) -> Column:
     return F.when(s.isNull() | (s == ""), F.lit(_HIVE_NULL)).otherwise(s)
 
 
-def _touched(frame: DataFrame, partition_cols: list[str]) -> set[tuple[str, ...]]:
-    """Rendered partition tuples of ``frame``: one collect of one small
-    row per partition, never per data row."""
-    rendered = frame.select([_render(F.col(c)).alias(c) for c in partition_cols])
-    return {tuple(r) for r in rendered.distinct().collect()}
+def _touched(
+    frame: DataFrame, partition_cols: list[str], flag: Column
+) -> dict[tuple[str, ...], bool]:
+    """Rendered partition tuple of ``frame`` -> max of ``flag`` over its
+    rows: one collect of one small row per partition, never per data
+    row."""
+    rows = (
+        frame.groupBy(*[_render(F.col(c)).alias(c) for c in partition_cols])
+        .agg(F.max(flag))
+        .collect()
+    )
+    return {tuple(r[:-1]): r[-1] for r in rows}
 
 
 def _partition_dirs(
@@ -188,7 +224,9 @@ def upsert_by_key(
 
     Matched rows are fully replaced by the update row (the reference's
     WHEN MATCHED UPDATE SET <all cols>); unmatched rows are inserted.
-    Re-running the same batch is a no-op on the final state.
+    Re-running the same batch is a no-op on the final state. The table
+    holds the batch's columns: it is read with ``updates``' schema, so
+    no read infers one.
 
     MATCHING defaults to ANSI MERGE semantics: a NULL key never
     matches, so upserting a NULL-key row INSERTS a second copy instead
@@ -199,18 +237,30 @@ def upsert_by_key(
     without it a NULL-key state row silently duplicates on every
     upsert and downstream reads double-count the group.
 
-    Only the touched partitions are rewritten: those of the batch's
-    rows and, unless every partition column is also a key column,
-    those where the batch's keys live now. A key may arrive with a
-    different partition value than the row it replaces (a corrected
-    trade date on a date-partitioned table); the extra scan of the
-    table's key and partition columns finds the old partition so the
-    stale row is removed. A partition column that is a function of
-    the key (a year or bucket of it) belongs in ``key_cols``: matching
-    is unchanged and the scan is skipped.
+    A partitioned table is written per touched partition. One probe —
+    a semi-join of the table with the batch's keys, folded into the
+    collect of the batch's partitions — finds the partitions where a
+    batch key lives now; a key may live in another partition than its
+    update row (a corrected trade date on a date-partitioned table).
 
-    ``updates`` is persisted for the call: its plan feeds the
-    touched-partition collect, the key anti-join and the staged write.
+    - A partition holding a batch key is rewritten without the matched
+      rows, plus the batch's rows for it; a partition the batch empties
+      is removed.
+    - Every other touched partition gets the batch's rows as new files
+      beside its live ones, so a day of new bars costs the bars, not
+      the history. A partition that already holds
+      ``_MAX_PARTITION_FILES`` files is rewritten instead, which
+      compacts it.
+
+    A writer that keeps a table unique on ``key_cols`` (bronze on
+    ``(symbol, date)``: ``bronze_batch`` drops NULL and duplicate keys)
+    therefore keeps it unique. An unpartitioned table is rewritten
+    whole.
+
+    ``updates`` is checkpointed lazily, because its plan feeds the
+    probe, the key anti-join and the staged write. A persisted plan
+    would cost one more job per scan of it: adaptive execution
+    materializes each cached scan as a query stage of its own.
     """
     path = _table_path(warehouse_dir, table)
     partition_cols = partition_cols or []
@@ -219,43 +269,59 @@ def upsert_by_key(
         overwrite_table(updates, warehouse_dir, table, partition_cols)
         return
 
-    existing = _read_live(
-        spark, path, {c: updates.schema[c].dataType for c in partition_cols}
-    )
-    updates = updates.persist()
-    try:
-        key_set = updates.select(*key_cols).distinct()
-        touched, affected = None, existing
-        if partition_cols:
-            parts = updates.select(*partition_cols)
-            if not set(partition_cols) <= set(key_cols):
-                prior = (
-                    _null_safe_join(existing, key_set, key_cols, "left_semi")
-                    if null_safe_keys
-                    else existing.join(F.broadcast(key_set), key_cols, "left_semi")
-                )
-                parts = parts.unionByName(prior.select(*partition_cols))
-            touched = _touched(parts, partition_cols)
-            affected = _live_rows(existing, path, partition_cols, touched)
+    schema = partitions_last(updates.schema, partition_cols)
+    existing = spark.read.schema(schema).parquet(str(path))
+    updates = updates.localCheckpoint(eager=False)
+    key_set = updates.select(*key_cols)
 
-        merged = updates.select(*existing.columns)
-        if affected is not None:
-            kept = (
-                _null_safe_join(affected, key_set, key_cols, "left_anti")
-                if null_safe_keys
-                else affected.join(key_set, key_cols, "left_anti")
-            )
-            merged = kept.unionByName(merged)
-        _swap_staged(merged, path, partition_cols, touched)
-    finally:
-        updates.unpersist()
+    def without_batch_keys(df: DataFrame, how: str) -> DataFrame:
+        if null_safe_keys:
+            return _null_safe_join(df, key_set, key_cols, how)
+        return df.join(F.broadcast(key_set), key_cols, how)
+
+    rewrite, affected = None, existing
+    if partition_cols:
+        prior = without_batch_keys(existing, "left_semi")
+        probe = updates.select(*partition_cols, F.lit(False).alias("__hit"))
+        probe = probe.unionByName(
+            prior.select(*partition_cols, F.lit(True).alias("__hit"))
+        )
+        hit = _touched(probe, partition_cols, F.col("__hit"))
+        live = _partition_dirs(path, partition_cols)
+        rewrite = {
+            vals for vals, is_hit in hit.items()
+            if is_hit or (vals in live and _file_count(live[vals]) >= _MAX_PARTITION_FILES)
+        }
+        affected = _live_rows(existing, path, partition_cols, rewrite)
+
+    merged = updates.select(*existing.columns)
+    if affected is not None:
+        merged = without_batch_keys(affected, "left_anti").unionByName(merged)
+        leaves = [path] if rewrite is None else [live[v] for v in rewrite if v in live]
+        merged = coalesce_by_bytes(merged, leaves)
+    _swap_staged(merged, path, partition_cols, rewrite)
+
+
+def coalesce_by_bytes(frame: DataFrame, dirs: list[Path]) -> DataFrame:
+    """``frame`` in one task per ``_TASK_BYTES`` of the parquet files
+    under ``dirs``, without a shuffle. A task writes one file per
+    partition value it holds, and a scan's splits mix the files of
+    every partition, so this is what keeps a rewrite of several small
+    files per partition from writing as many again."""
+    nbytes = sum(f.stat().st_size for d in dirs for f in d.rglob("*.parquet"))
+    return frame.coalesce(max(1, -(-nbytes // _TASK_BYTES)))
+
+
+def _file_count(leaf: Path) -> int:
+    """Data files in a partition directory (Spark skips ``.``/``_`` names)."""
+    return sum(1 for f in leaf.iterdir() if not f.name.startswith((".", "_")))
 
 
 def _swap_staged(
     frame: DataFrame,
     path: Path,
     partition_cols: list[str],
-    touched: set[tuple[str, ...]] | None,
+    rewrite: set[tuple[str, ...]] | None,
 ) -> None:
     """Write ``frame`` to a hidden staging directory beside the table at
     ``path``, then publish it — the only place a table directory is
@@ -263,33 +329,48 @@ def _swap_staged(
     directory while lazily reading it corrupts the scan.
 
     Unpartitioned, the staged directory replaces the table. Partitioned,
-    each staged leaf partition replaces its live counterpart, and then
-    every ``touched`` partition that staged no rows (its keys moved or
-    were erased) is removed. Swapping at leaf granularity keeps
-    untouched sibling partitions that share a first-level value.
+    a staged leaf partition in ``rewrite`` replaces its live counterpart;
+    any other has its files moved into the live partition, one rename
+    each (an append). Then every ``rewrite`` partition that staged no
+    rows (its keys moved or were erased) is removed. Publishing at leaf
+    granularity keeps untouched sibling partitions that share a
+    first-level value.
 
-    The swap is not atomic across partitions: a crash mid-loop leaves
-    some partitions new and some old, each consistent on its own, and
-    re-running the same write heals the table."""
+    Every move is a rename, so a crash leaves no part of a file. A
+    replaced directory is first renamed aside into the staging
+    directory, and deleted with it once all moves are done, so a crash
+    between its two renames leaves it missing from the table, with its
+    old files under the orphaned staging directory. Otherwise a crash
+    leaves some partitions or files published and some not, and
+    re-running the same write heals the table, because a published key
+    makes its partition a rewrite."""
     staging = path.parent / f".staging_{path.name}_{uuid.uuid4().hex[:8]}"
     writer = frame.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(str(staging))
+    retired = staging / "_replaced"
     if not partition_cols:
-        shutil.rmtree(path)
+        shutil.move(str(path), str(retired))
         shutil.move(str(staging), str(path))
+        shutil.rmtree(path / retired.name)
         return
     staged = _partition_dirs(staging, partition_cols)
-    for leaf in staged.values():
-        dest = path / leaf.relative_to(staging)
+    for vals, leaf in staged.items():
+        rel = leaf.relative_to(staging)
+        dest = path / rel
+        if vals not in rewrite and dest.exists():
+            for f in sorted(leaf.iterdir()):
+                shutil.move(str(f), str(dest / f.name))
+            continue
         if dest.exists():
-            shutil.rmtree(dest)
+            (retired / rel).parent.mkdir(parents=True, exist_ok=True)
+            shutil.move(str(dest), str(retired / rel))
         dest.parent.mkdir(parents=True, exist_ok=True)
         shutil.move(str(leaf), str(dest))
     shutil.rmtree(staging, ignore_errors=True)
     for vals, leaf in _partition_dirs(path, partition_cols).items():
-        if vals in touched and vals not in staged:
+        if vals in rewrite and vals not in staged:
             shutil.rmtree(leaf)
 
 
@@ -349,7 +430,7 @@ def erase_keys(
     touched, affected = None, existing
     if partition_cols:
         prior = _null_safe_join(existing, key_set, key_cols, "left_semi")
-        touched = _touched(prior, partition_cols)
+        touched = set(_touched(prior, partition_cols, F.lit(True)))
         affected = _live_rows(existing, path, partition_cols, touched)
         if affected is None:
             return 0

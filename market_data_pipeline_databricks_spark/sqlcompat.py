@@ -284,15 +284,6 @@ def sql(spark: SparkSession, text: str) -> DataFrame:
     return df
 
 
-def _delta_available(spark: SparkSession) -> bool:
-    try:
-        import delta  # type: ignore  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def ddl(spark: SparkSession, text: str) -> DataFrame:
     """Execute a Databricks-dialect DDL statement on OSS Spark.
 
@@ -303,15 +294,12 @@ def ddl(spark: SparkSession, text: str) -> DataFrame:
     format is unknown, so this shim rewrites the top-level
     ``USING DELTA`` clause to ``USING PARQUET`` — identical columnar
     layout and partitioning; keyed upserts into the table go through
-    :func:`merge`, which rewrites only the touched partitions
+    :func:`merge`, which writes only the touched partitions
     (``sources/writers.upsert_by_key``).
-    When delta-spark IS importable the statement passes through
-    unchanged. The scan respects string literals / quoted identifiers
+    The scan respects string literals / quoted identifiers
     / comments (same scanner as the QUALIFY rewrite), so a table or
     column spelled 'using delta' is never corrupted."""
     stmt = text.strip().rstrip(";")
-    if _delta_available(spark):
-        return spark.sql(stmt)
     i = _scan_top_level(stmt, "USING")
     if i >= 0:
         m = re.match(r"(?is)USING\s+DELTA\b", stmt[i:])
@@ -411,14 +399,11 @@ def merge(
     The reference's bronze ingest is a Delta MERGE
     (notebooks/bronze/01_ingest_bronze.py:93-107: match on the
     (symbol, date) grain, update every value column, insert new rows).
-    With delta-spark importable the statement passes through to
-    ``spark.sql`` untouched. Without it (this container: no network
-    route to install it), the statement is parsed — same documented
-    subset the reference uses — and executed with IDENTICAL semantics
-    through the engine's parquet upsert
-    (``sources/writers.upsert_by_key``: idempotent, rewrites only the
-    partitions the batch touches), reading the source from the
-    registered temp view exactly as the notebook does.
+    The statement is parsed — same documented subset the reference
+    uses — and executed with IDENTICAL semantics through the engine's
+    parquet upsert (``sources/writers.upsert_by_key``: idempotent,
+    writes only the partitions the batch touches), reading the source
+    from the registered temp view exactly as the notebook does.
 
     Restrictions (ValueError otherwise, so silent divergence is
     impossible): equality-conjunction ON, UPDATE SET of col = col
@@ -433,18 +418,6 @@ def merge(
     Returns the post-merge table as a DataFrame.
     """
     stmt = text.strip().rstrip(";")
-    if _delta_available(spark):
-        # Resolve the target BEFORE executing: Delta accepts MERGE
-        # shapes wider than _MERGE_RE (e.g. WHEN MATCHED THEN DELETE,
-        # no alias), and failing to parse AFTER the statement already
-        # ran would surface as an AttributeError mid-flight.
-        m = _MERGE_RE.match(stmt) or re.match(
-            r"(?is)^\s*MERGE\s+INTO\s+(?P<target>[`\w.]+)", stmt
-        )
-        if not m:
-            raise ValueError(f"cannot resolve MERGE target in: {stmt[:80]!r}")
-        spark.sql(stmt)
-        return spark.table(m.group("target").strip("`"))
     target, source, key_cols, set_cols = _parse_merge(stmt)
     if warehouse_dir is None:
         raise ValueError(

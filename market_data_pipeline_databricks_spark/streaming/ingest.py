@@ -17,21 +17,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# Raw CSV schema: the superset header (Volume optional at file level is
-# handled by PERMISSIVE mode leaving it NULL). Streaming readers require
-# an explicit schema — inference would need a blocking pre-pass.
-RAW_CSV_SCHEMA = T.StructType(
-    [
-        T.StructField("Date", T.StringType()),
-        T.StructField("Open", T.StringType()),
-        T.StructField("High", T.StringType()),
-        T.StructField("Low", T.StringType()),
-        T.StructField("Close", T.StringType()),
-        T.StructField("Volume", T.StringType()),
-    ]
-)
+from market_data_pipeline_databricks_spark.schemas import RAW_CSV_SCHEMA
 
 
 def read_price_csv_stream(
@@ -48,6 +35,8 @@ def read_price_csv_stream(
     """
     from market_data_pipeline_databricks_spark.operators.bronze import normalize_raw
 
+    # the superset header (``schemas.RAW_CSV_SCHEMA``): PERMISSIVE mode
+    # leaves Volume NULL for FX files; a stream needs an explicit schema
     reader = (
         spark.readStream.schema(RAW_CSV_SCHEMA)
         .option("header", "true")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from market_data_pipeline_databricks_spark.config import PipelineConfig
 from market_data_pipeline_databricks_spark.pipeline import run_bronze, run_pipeline
+from market_data_pipeline_databricks_spark.sources import read_table
 
 RUN_TS = dt.datetime(2025, 12, 1, 12, 0, 0)
 TODAY = dt.date(2025, 12, 1)
@@ -90,6 +91,116 @@ def test_bronze_upsert_idempotent(spark, raw_dir, tmp_path):
     assert again.count() == n1  # same keys → same row count (MERGE semantics)
     # and the later ingest won: all rows carry the newer timestamp
     assert again.filter(F.col("ingested_at") == RUN_TS).count() == 0
+
+
+def _write_batch(raw_dir, rows):
+    """One CSV per symbol; a symbol whose bars carry no volume gets the
+    FX layout, without a Volume column."""
+    import shutil
+
+    shutil.rmtree(raw_dir, ignore_errors=True)
+    raw_dir.mkdir(parents=True)
+    for sym, bars in rows.items():
+        fx = all(b[4] is None for b in bars.values())
+        lines = ["Date,Open,High,Low,Close" + ("" if fx else ",Volume")]
+        for d, (o, h, lo, c, v) in sorted(bars.items()):
+            lines.append(f"{d},{o},{h},{lo},{c}" + ("" if fx else f",{v}"))
+        (raw_dir / f"{sym}.csv").write_text("\n".join(lines) + "\n")
+
+
+def _table_rows(df):
+    return sorted(tuple(map(str, r)) for r in df.collect())
+
+
+def test_multi_batch_pipeline_equals_one_run_over_final_inputs(spark, tmp_path):
+    """Daily batches (new bars, a restatement, a key that turns invalid
+    and back, an identical re-ingest) leave bronze, silver, rejected and
+    gold as one run over the final inputs does: bronze appends new bars
+    and replaces restated ones, and silver needs no dedup."""
+    days = [dt.date(2025, 1, 6) + dt.timedelta(days=i) for i in range(14)]
+
+    def bar(i, scale=1.0, vol=True):
+        c = (100.0 + i) * scale
+        return (c, c * 1.01, c * 0.99, c, 1000 + i if vol else None)
+
+    batches = [
+        {"AAA": {days[i]: bar(i) for i in range(10)},
+         "FXB": {days[i]: bar(i, 0.01, vol=False) for i in range(10)}},
+        {"AAA": {days[10]: bar(10), days[3]: bar(3, 1.5),
+                 days[5]: (10.0, 9.5, 9.0, 10.0, 100)},  # high < close
+         "FXB": {days[10]: bar(10, 0.01, vol=False)}},
+        {"AAA": {days[5]: bar(5, 2.0), days[11]: bar(11)},
+         "FXB": {days[11]: bar(11, 0.01, vol=False)}},
+    ]
+    batches.append(batches[-1])  # identical re-ingest
+    raw = tmp_path / "raw"
+    multi = PipelineConfig(raw_dir=str(raw), warehouse_dir=str(tmp_path / "multi"))
+    final: dict = {}
+    for batch in batches:
+        _write_batch(raw, batch)
+        run_pipeline(spark, multi, ingested_at=RUN_TS, today=TODAY)
+        for sym, bars in batch.items():
+            final.setdefault(sym, {}).update(bars)
+    _write_batch(raw, final)
+    once = PipelineConfig(raw_dir=str(raw), warehouse_dir=str(tmp_path / "once"))
+    want = run_pipeline(spark, once, ingested_at=RUN_TS, today=TODAY)
+    got = {
+        name: read_table(spark, multi.warehouse_dir, getattr(multi, f"{name}_table"))
+        for name in ("bronze", "silver", "rejected", "gold")
+    }
+    for name, df in got.items():
+        assert _table_rows(df) == _table_rows(want[name]), name
+    assert want["rejected"].count() == 0
+    assert want["bronze"].count() == 24
+
+
+# Spark jobs per medallion stage on the fixture CSVs, as ceilings: the
+# counts of the first and second run of bronze -> silver -> gold ->
+# quality (the first bronze run creates the table; the second upserts).
+_STAGE_JOB_CEILINGS = {"bronze": 6, "silver": 2, "gold": 2, "quality": 5}
+
+
+def test_medallion_stage_job_budget(spark, raw_dir, tmp_path):
+    import uuid
+
+    from market_data_pipeline_databricks_spark import pipeline as P
+
+    sc = spark.sparkContext
+    cfg = _cfg(raw_dir, tmp_path)
+    stages = {
+        "bronze": lambda: P.run_bronze(spark, cfg, ingested_at=RUN_TS),
+        "silver": lambda: P.run_silver(spark, cfg),
+        "gold": lambda: P.run_gold(spark, cfg, computed_at=RUN_TS),
+        "quality": lambda: P.run_quality(spark, cfg, run_ts=RUN_TS, today=TODAY),
+    }
+    got: dict[str, list[int]] = {}
+    for _ in range(2):
+        for name, fn in stages.items():
+            group = f"stage-budget-{uuid.uuid4().hex[:8]}"
+            sc.setJobGroup(group, "medallion stage job budget")
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            got.setdefault(name, []).append(
+                len(sc.statusTracker().getJobIdsForGroup(group))
+            )
+    assert all(max(n) <= _STAGE_JOB_CEILINGS[k] for k, n in got.items()), got
+
+
+def test_read_table_keeps_string_partition_values(spark, tmp_path):
+    """A numeric-looking symbol comes back from bronze as the string it
+    was, not as the integer partition inference would make of it."""
+    from market_data_pipeline_databricks_spark.sources import read_table
+
+    raw = tmp_path / "raw"
+    _write_batch(raw, {"007": {dt.date(2025, 1, 6): (10.0, 11.0, 9.0, 10.0, 5)}})
+    cfg = _cfg(raw, tmp_path)
+    run_bronze(spark, cfg, ingested_at=RUN_TS)
+    bronze = read_table(spark, cfg.warehouse_dir, cfg.bronze_table)
+    assert dict(bronze.dtypes)["symbol"] == "string"
+    assert [r.symbol for r in bronze.collect()] == ["007"]
 
 
 def test_gold_incremental_equals_full_recompute(spark):

@@ -10,6 +10,10 @@ compaction rewrite path.
 - partition values round-trip through the one rendering (the
   directory name) for every type, including those whose Python
   ``str()`` or inferred read-back type differs from Spark's;
+- the append path: new keys add files beside a partition's live ones,
+  a colliding key rewrites only its partition, a partition at the file
+  bound is rewritten, and a replay or a re-run after a crash between
+  appended files gives the table of one clean run;
 - the null-safe join helper and null-safe key matching;
 - a ceiling on the Spark jobs each keyed write runs.
 """
@@ -436,3 +440,98 @@ def test_writer_job_budget(spark, tmp_path):
     assert sorted((r.sym, r.d, r.v) for r in back.collect()) == [
         ("A", 1, 9.0), ("B", 1, 3.0), ("C", 5, 9.0),
     ]
+
+
+# -- the append path ---------------------------------------------------
+
+def _upsert_kvp(spark, wh, rows):
+    upd = spark.createDataFrame(rows, "k int, v string, p string")
+    upsert_by_key(spark, upd, wh, "t", ["k"], ["p"])
+
+
+def test_upsert_new_keys_appends_files(spark, tmp_path):
+    """Only new keys: every live file of the partition stays, with its
+    name and mtime, and the batch arrives as new files beside them."""
+    wh = str(tmp_path)
+    _upsert_kvp(spark, wh, [(1, "a", "x"), (2, "b", "x")])
+    before = _listing(tmp_path / "t")
+    _upsert_kvp(spark, wh, [(3, "c", "x")])
+    after = _listing(tmp_path / "t")
+    assert {f: after.get(f) for f in before} == before
+    assert len(after) > len(before)
+    assert _kvp(spark, wh, "t") == {(1, "a", "x"), (2, "b", "x"), (3, "c", "x")}
+
+
+def test_upsert_colliding_key_rewrites_only_its_partition(spark, tmp_path):
+    wh = str(tmp_path)
+    _upsert_kvp(spark, wh, [(1, "a", "x"), (2, "b", "y")])
+    before = _listing(tmp_path / "t")
+    _upsert_kvp(spark, wh, [(1, "a2", "x"), (3, "c", "y")])
+    after = _listing(tmp_path / "t")
+    old_x = {f for f in before if f.startswith("p=x")}
+    old_y = {f: s for f, s in before.items() if f.startswith("p=y")}
+    assert not old_x & set(after), "the colliding partition is rewritten"
+    assert {f: after.get(f) for f in old_y} == old_y, "the other one appends"
+    assert _kvp(spark, wh, "t") == {(1, "a2", "x"), (2, "b", "y"), (3, "c", "y")}
+
+
+def test_upsert_at_file_bound_rewrites_partition(spark, tmp_path, monkeypatch):
+    from market_data_pipeline_databricks_spark.sources import writers
+
+    monkeypatch.setattr(writers, "_MAX_PARTITION_FILES", 3)
+    wh = str(tmp_path)
+    pdir = tmp_path / "t" / "p=x"
+    for k in range(3):
+        _upsert_kvp(spark, wh, [(k, f"v{k}", "x")])
+    assert writers._file_count(pdir) == 3
+    before = set(_listing(pdir))
+    _upsert_kvp(spark, wh, [(3, "v3", "x")])
+    assert writers._file_count(pdir) < 3
+    assert not before & set(_listing(pdir))
+    assert _kvp(spark, wh, "t") == {(k, f"v{k}", "x") for k in range(4)}
+
+
+def test_upsert_replay_after_append_is_idempotent(spark, tmp_path):
+    wh = str(tmp_path)
+    _upsert_kvp(spark, wh, [(1, "a", "x"), (2, "b", "y")])
+    batch = [(3, "c", "x"), (4, "d", "y"), (5, "e", "z")]
+    _upsert_kvp(spark, wh, batch)
+    once = _kvp(spark, wh, "t")
+    _upsert_kvp(spark, wh, batch)
+    assert _kvp(spark, wh, "t") == once == {
+        (1, "a", "x"), (2, "b", "y"), (3, "c", "x"), (4, "d", "y"), (5, "e", "z"),
+    }
+
+
+def test_upsert_crash_between_append_moves_heals_on_rerun(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the first appended file is published leaves one
+    partition with the batch's rows and the other without; re-running
+    the same upsert rewrites the first (its keys are live now) and
+    appends to the second."""
+    import shutil
+
+    from market_data_pipeline_databricks_spark.sources import writers
+
+    wh = str(tmp_path)
+    _upsert_kvp(spark, wh, [(1, "a", "x"), (2, "b", "y")])
+    batch = [(3, "c", "x"), (4, "d", "y")]
+    real_move, moved = shutil.move, []
+
+    def crashing_move(src, dst):
+        if moved and dst.endswith(".parquet"):
+            raise OSError("crash between append moves")
+        if dst.endswith(".parquet"):
+            moved.append(dst)
+        return real_move(src, dst)
+
+    monkeypatch.setattr(writers.shutil, "move", crashing_move)
+    with pytest.raises(OSError, match="crash between append moves"):
+        _upsert_kvp(spark, wh, batch)
+    monkeypatch.setattr(writers.shutil, "move", real_move)
+    assert len(moved) == 1
+    half = _kvp(spark, wh, "t")
+    assert len(half) == 3 and {(1, "a", "x"), (2, "b", "y")} < half
+    _upsert_kvp(spark, wh, batch)
+    assert _kvp(spark, wh, "t") == {(1, "a", "x"), (2, "b", "y"), (3, "c", "x"), (4, "d", "y")}
