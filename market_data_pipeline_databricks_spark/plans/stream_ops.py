@@ -1064,7 +1064,9 @@ def stream_evolved_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_price"),
             )
 
-        constructed = agg(read_pruned(spark, tdir, "o_custkey", 100, 400))
+        constructed = agg(
+            read_pruned(spark, tdir, [("between", "o_custkey", 100, 400)])
+        )
         twin = agg(orders.filter(F.col("o_custkey").between(100, 400)))
         return checked_lazy(constructed, twin, "stream_evolved_commits")
     finally:

@@ -1294,7 +1294,9 @@ def warehouse_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
             tdir,
             cluster_partitions=8,
         )
-        pruned = read_pruned(spark, tdir, "o_custkey", 100, 400)
+        pruned = read_pruned(
+            spark, tdir, [("between", "o_custkey", 100, 400)]
+        )
         constructed = pruned.groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum("o_totalprice")
@@ -1349,8 +1351,8 @@ def warehouse_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame
     carries TRANSFORM-space bounds. The reads then filter on the
     SOURCE columns only — a plain ``o_orderdate`` range and a plain
     ``o_custkey`` equality; the engine maps the predicates into month
-    / hash-bucket space at the manifest (``prune_files`` /
-    ``prune_files_eq``) and the drive ASSERTS files were actually
+    / hash-bucket space at the manifest (``prune_files`` with a
+    ``between`` / ``eq`` predicate) and the drive ASSERTS files were actually
     skipped on both paths, so the hidden mapping is enforced, not
     incidental. Residual row filters keep exactness independent of
     pruning; the DuckDB oracle replays both raw filters, so a
@@ -1367,9 +1369,7 @@ def warehouse_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame
         commit_append,
         evolve_partition_spec,
         prune_files,
-        prune_files_eq,
         read_pruned,
-        read_pruned_eq,
         rewrite_to_spec,
     )
 
@@ -1402,8 +1402,10 @@ def warehouse_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame
 
         _build(tm, "month(o_orderdate)")
         _build(tb, "bucket(8, o_custkey)")
-        kept_m, total_m = prune_files(tm, "o_orderdate", lo, hi)
-        kept_b, total_b = prune_files_eq(tb, "o_custkey", cust)
+        month_range = [("between", "o_orderdate", lo, hi)]
+        custkey_point = [("eq", "o_custkey", cust)]
+        kept_m, total_m = prune_files(tm, month_range)
+        kept_b, total_b = prune_files(tb, custkey_point)
         if not (len(kept_m) < total_m and len(kept_b) < total_b):
             raise AssertionError(
                 "warehouse_hidden_partitioning: transform pruning "
@@ -1427,9 +1429,9 @@ def warehouse_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame
             )
 
         constructed = agg(
-            read_pruned(spark, tm, "o_orderdate", lo, hi), "month_range"
+            read_pruned(spark, tm, month_range), "month_range"
         ).unionByName(
-            agg(read_pruned_eq(spark, tb, "o_custkey", cust), "custkey_point")
+            agg(read_pruned(spark, tb, custkey_point), "custkey_point")
         )
         twin = agg(
             orders.filter(F.col("o_orderdate").between(lo, hi)),
@@ -1477,9 +1479,9 @@ def warehouse_composite_spec_pruning(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """COMPOSITE transform spec + CONJUNCTIVE manifest pruning
-    (sources/snapshots.py:prune_files_conj — the follow-on to
-    warehouse_hidden_partitioning's single-entry specs): ONE snapshot
-    table of 1996 orders evolves to ``["month(o_orderdate)",
+    (sources/snapshots.py:prune_files over a two-predicate list — the
+    follow-on to warehouse_hidden_partitioning's single-entry specs):
+    ONE snapshot table of 1996 orders evolves to ``["month(o_orderdate)",
     "bucket(8, o_custkey)"]`` — both transform dimensions at once —
     with an un-clustered pre-evolution commit (the conservative
     never-pruned path stays exercised) and a spec-clustered commit
@@ -1506,9 +1508,7 @@ def warehouse_composite_spec_pruning(
         commit_append,
         evolve_partition_spec,
         prune_files,
-        prune_files_conj,
-        prune_files_eq,
-        read_pruned_conj,
+        read_pruned,
     )
 
     orders = (
@@ -1552,9 +1552,9 @@ def warehouse_composite_spec_pruning(
             ("between", "o_orderdate", lo, hi),
             ("eq", "o_custkey", int(target)),
         ]
-        kept_c, total = prune_files_conj(td, preds)
-        kept_m, _ = prune_files(td, "o_orderdate", lo, hi)
-        kept_b, _ = prune_files_eq(td, "o_custkey", int(target))
+        kept_c, total = prune_files(td, preds)
+        kept_m, _ = prune_files(td, preds[:1])
+        kept_b, _ = prune_files(td, preds[1:])
         if not (
             len(kept_c) < len(kept_m)
             and len(kept_c) < len(kept_b)
@@ -1574,7 +1574,7 @@ def warehouse_composite_spec_pruning(
                 "is not the intersection of the per-predicate kept sets"
             )
         constructed = (
-            read_pruned_conj(spark, td, preds)
+            read_pruned(spark, td, preds)
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),

@@ -23,17 +23,19 @@ Scale shape: manifests are SEGMENTED (Iceberg's manifest-list shape —
 see the format comment at ``_load_raw``): each commit writes one
 immutable segment holding just ITS files+stats, and the version
 manifest lists segment names + removed-file tombstones, so a commit
-writes O(changed files) of metadata — never the table's ~800k-entry
-file list, which the original inline format re-serialized on every
-commit (the 100-TB scale-killer the r13 verdict named). The COW
+writes O(changed files) of metadata — never the table's file list,
+which at ~800k entries would make every commit O(table). The COW
 rewrite reads only affected files, so a point-correction batch costs
-O(files-containing-matches), never O(table). Commit publication is
-CREATE-EXCLUSIVE: the manifest is
-written to a temp file and hard-linked into place, so of two
-concurrent writers racing to commit the same version number exactly
-one wins and the loser gets :class:`ConcurrentCommitError` — the same
-optimistic-concurrency contract Delta/Iceberg give (a plain rename
-would silently overwrite the winner: a lost commit).
+O(files-containing-matches), never O(table). Every writer publishes
+through one commit path (:func:`_commit`), and every pruned read
+through one predicate list (:func:`prune_files` / :func:`read_pruned`).
+
+Commit publication is CREATE-EXCLUSIVE: the manifest is written to a
+temp file and hard-linked into place, so of two concurrent writers
+racing to commit the same version number exactly one wins and the
+loser gets :class:`ConcurrentCommitError` — the same optimistic-
+concurrency contract Delta/Iceberg give (a plain rename would silently
+overwrite the winner: a lost commit).
 
 Reference parity: extends the reference's MERGE/partitioned-DDL
 surface (notebooks/bronze/01_ingest_bronze.py:85-107) with the
@@ -42,14 +44,20 @@ versioned-read semantics Delta gives it on Databricks.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
+import operator
 import os
 import re
 import uuid
+import zlib
+from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -87,27 +95,28 @@ def _require_absolute(table_dir: str) -> None:
         )
 
 
-def latest_version(table_dir: str) -> int:
-    """Highest committed version, 0 when the table does not exist."""
-    d = Path(table_dir)
-    if not d.exists():
-        return 0
-    versions = [
+def _versions(table_dir: str) -> list[int]:
+    """Every published version number (``v<N>.json``; none when the
+    table does not exist)."""
+    return [
         int(p.stem[1:])
-        for p in d.glob("v*.json")
+        for p in Path(table_dir).glob("v*.json")
         if p.stem[1:].isdigit()
     ]
-    return max(versions, default=0)
+
+
+def latest_version(table_dir: str) -> int:
+    """Highest committed version, 0 when the table does not exist."""
+    return max(_versions(table_dir), default=0)
 
 
 # ---------------------------------------------------------------------
-# Manifest layout (round 14): SEGMENTED, Iceberg's manifest-list shape.
+# Manifest layout: SEGMENTED, Iceberg's manifest-list shape.
 #
-# The original format serialized the FULL file list (plus all per-file
-# stats) into every version manifest, so every commit — including every
-# streaming micro-batch — rewrote O(table-files) of driver-side JSON:
-# affordable at drive scale, a scale-killer at 100 TB (~10^6 files,
-# hundreds of MB per commit). Now:
+# A version manifest never embeds the table's full file list: that
+# would make every commit — including every streaming micro-batch —
+# rewrite O(table-files) of driver-side JSON (hundreds of MB at ~10^6
+# files). Instead:
 #
 # - each commit writes ONE immutable SEGMENT (``seg-<uuid>.json``):
 #   exactly the files it added, with their per-file stats;
@@ -137,45 +146,58 @@ def _load_raw(table_dir: str, version: int) -> dict:
     return json.loads(_manifest_path(table_dir, version).read_text())
 
 
-def _resolved(table_dir: str, version: int) -> dict:
-    """Materialize a version manifest to
-    ``{"files", "spec", "file_stats", "segments", "removed"}`` —
-    segmented and legacy (inline ``files``) formats alike.
-    ``segments`` is ``None`` for legacy manifests. A segment deleted
-    by a concurrent expiry run is skipped: expiry only removes
-    segments no retained manifest references, so a vanished segment's
-    live files are reachable through some retained manifest's own
-    segments (same carried-by-reference argument as _retained_files).
-    """
-    d = _load_raw(table_dir, version)
-    if "segments" not in d:
-        return {
-            "files": list(d["files"]),
-            "spec": list(d.get("spec", [])),
-            "file_stats": dict(d.get("file_stats", {})),
-            "segments": None,
-            "removed": [],
-        }
-    removed = set(d.get("removed", []))
+def _spec(table_dir: str, version: int) -> list[str]:
+    """The partition spec ``version``'s manifest records (empty for
+    version 0 and for legacy/unevolved tables) — one manifest read, no
+    segment resolution."""
+    if not version:
+        return []
+    return list(_load_raw(table_dir, version).get("spec", []))
+
+
+def _union_segments(
+    table_dir: str, segments: list[str], removed: list[str]
+) -> tuple[list[str], dict[str, dict[str, list]]]:
+    """(files, per-file stats) of ``segments`` minus ``removed``. A
+    segment deleted by a concurrent expiry run is skipped: expiry only
+    removes segments no retained manifest references, so a vanished
+    segment's live files are reachable through some retained
+    manifest's own segments (same carried-by-reference argument as
+    _retained_files)."""
+    rm = set(removed)
     files: list[str] = []
     stats: dict[str, dict[str, list]] = {}
-    for seg in d["segments"]:
+    for seg in segments:
         try:
             s = json.loads(_segment_path(table_dir, seg).read_text())
         except FileNotFoundError:
             continue
-        files.extend(f for f in s["files"] if f not in removed)
+        files.extend(f for f in s["files"] if f not in rm)
         stats.update(
-            (f, st)
-            for f, st in s.get("file_stats", {}).items()
-            if f not in removed
+            (f, st) for f, st in s.get("file_stats", {}).items() if f not in rm
         )
+    return files, stats
+
+
+def _resolved(table_dir: str, version: int) -> dict:
+    """Materialize a version manifest to
+    ``{"files", "spec", "file_stats", "segments"}`` — segmented and
+    legacy (inline ``files``) formats alike. ``segments`` is ``None``
+    for legacy manifests."""
+    d = _load_raw(table_dir, version)
+    segments = d.get("segments")
+    if segments is None:
+        files, stats = list(d["files"]), dict(d.get("file_stats", {}))
+    else:
+        files, stats = _union_segments(
+            table_dir, segments, d.get("removed", [])
+        )
+        files, segments = sorted(files), list(segments)
     return {
-        "files": sorted(files),
+        "files": files,
         "spec": list(d.get("spec", [])),
         "file_stats": stats,
-        "segments": list(d["segments"]),
-        "removed": sorted(removed),
+        "segments": segments,
     }
 
 
@@ -243,20 +265,7 @@ def _maybe_coalesce_segments(
     retained manifest does."""
     if len(segments) < _MAX_SEGMENTS:
         return segments, removed
-    rm = set(removed)
-    files: list[str] = []
-    stats: dict[str, dict[str, list]] = {}
-    for seg in segments:
-        try:
-            s = json.loads(_segment_path(table_dir, seg).read_text())
-        except FileNotFoundError:
-            continue
-        files.extend(f for f in s["files"] if f not in rm)
-        stats.update(
-            (f, st)
-            for f, st in s.get("file_stats", {}).items()
-            if f not in rm
-        )
+    files, stats = _union_segments(table_dir, segments, removed)
     return [_write_segment(table_dir, files, stats)], []
 
 
@@ -301,6 +310,23 @@ def _fsync_dir(path) -> None:
         os.close(fd)
 
 
+def _write_synced(f, payload: str) -> None:
+    """Write ``payload`` to the open file ``f``, fsync, and close it."""
+    with f:
+        f.write(payload)
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def _durable_temp(target: Path, payload: str) -> Path:
+    """Write ``payload`` to a fresh temp file beside ``target`` and
+    fsync it; the caller links or renames it into place, so the bytes
+    are durable BEFORE the name is."""
+    tmp = target.with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
+    _write_synced(open(tmp, "w"), payload)
+    return tmp
+
+
 def _exclusive_write(target: Path, payload: str, conflict_msg: str) -> None:
     """Atomic + EXCLUSIVE + DURABLE claim of ``target`` with
     ``payload``: write-to-temp with fsync, then ``os.link`` into place
@@ -309,15 +335,11 @@ def _exclusive_write(target: Path, payload: str, conflict_msg: str) -> None:
     loser raises :class:`ConcurrentCommitError` with ``conflict_msg``.
     A reader can never observe a half-written file at the final name.
     Used by version manifests and staging manifests alike."""
-    tmp = target.with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
     # durability BEFORE the name claim: fsync the bytes (and after the
     # link, the directory entry) so a crash cannot leave a claimed
     # manifest with unflushed content — the committed-but-unreadable
     # state the O_EXCL fallback below also guards against
-    with open(tmp, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
+    tmp = _durable_temp(target, payload)
     try:
         os.link(tmp, target)
         _fsync_dir(target.parent)
@@ -338,10 +360,7 @@ def _exclusive_write(target: Path, payload: str, conflict_msg: str) -> None:
     except FileExistsError as exc:
         raise ConcurrentCommitError(conflict_msg) from exc
     try:
-        with os.fdopen(fd, "w") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
+        _write_synced(os.fdopen(fd, "w"), payload)
         _fsync_dir(target.parent)
     except BaseException:
         # a failed write must not leave a claimed-but-truncated
@@ -396,21 +415,37 @@ def _publish(
     )
 
 
-def _manifest_meta(
-    table_dir: str, version: int
-) -> tuple[list[str], dict[str, dict[str, list]]]:
-    """(partition spec, per-file stats) visible at ``version`` —
-    resolved through segments for the new format, inline for legacy
-    manifests written before partition evolution existed."""
-    d = _resolved(table_dir, version)
-    return d["spec"], d["file_stats"]
+def _commit(
+    table_dir: str,
+    prev: int,
+    spec: list[str],
+    files: list[str] | None = None,
+    stats: dict[str, dict[str, list]] | None = None,
+    replaced: list[str] | None = None,
+) -> tuple[list[str], list[str]]:
+    """The one commit path: publish version ``prev + 1`` as the base
+    refs of ``prev`` (coalesced past _MAX_SEGMENTS), plus one fresh
+    segment for ``files`` (with their ``stats``) when given, with the
+    ``replaced`` files tombstoned and fully-dead segments compacted
+    away. Prior segments carry by reference — the manifest write is
+    O(changed), never O(table). Returns the base ``(segments,
+    removed)``: the prior state a caller can roll the claim back to."""
+    base = _maybe_coalesce_segments(table_dir, *_base_refs(table_dir, prev))
+    segments, removed = base
+    if files is not None:
+        segments = segments + [_write_segment(table_dir, files, stats)]
+    if replaced:
+        segments, removed = _compact_refs(
+            table_dir, segments, removed + replaced
+        )
+    _publish(table_dir, prev + 1, segments, removed, spec=spec)
+    return base
 
 
 def active_spec(table_dir: str) -> list[str]:
     """The partition spec new commits should cluster by: the one the
     LATEST manifest records (empty for legacy/unevolved tables)."""
-    v = latest_version(table_dir)
-    return _manifest_meta(table_dir, v)[0] if v else []
+    return _spec(table_dir, latest_version(table_dir))
 
 
 # --- hidden partitioning (Iceberg-style transform keys) -------------
@@ -423,7 +458,7 @@ def active_spec(table_dir: str) -> list[str]:
 # stays hidden from query authors, which is the Iceberg insight that
 # kills the "forgot the redundant month predicate → full scan" class
 # of bug. Monotone transforms (month/day/truncate, identity) prune
-# ranges; bucket prunes equality probes (prune_files_eq).
+# ranges; bucket prunes equality probes (``("eq", key, value)``).
 #
 # bucket() uses crc32 over the value's string cast — NOT Iceberg's
 # murmur3 — because it is cheaply computable on BOTH sides: Spark-side
@@ -493,10 +528,7 @@ def _check_spec_types(df: DataFrame, spec: list[str]) -> None:
     bucket() over a decimal/timestamp key would hash Spark's string
     cast ('371.00') while the Python probe hashes str(371) — a SILENT
     mis-prune; truncate() over a non-numeric column derives all-NULL
-    partition values — a silent no-op of the feature (review
-    findings)."""
-    from pyspark.sql import types as T
-
+    partition values — a silent no-op of the feature."""
     integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     numeric = integral + (T.FloatType, T.DoubleType, T.DecimalType)
     temporal = (T.DateType, T.TimestampType, T.TimestampNTZType)
@@ -534,8 +566,6 @@ def _bucket_of(value, n: int) -> int:
     """Python twin of the bucket() transform for plan-time probes —
     must equal Spark's ``pmod(crc32(cast(col as string)), n)`` (CRC-32
     over the UTF-8 string cast; pinned by pytest)."""
-    import zlib
-
     return zlib.crc32(str(value).encode("utf-8")) % n
 
 
@@ -543,8 +573,6 @@ def _probe_bounds(kind: str, p: int | None, lo, hi):
     """Map a SOURCE-column range into a transform's partition space
     (monotone transforms only — the mapped range covers exactly the
     partition values any matching row can have)."""
-    import datetime as _dt
-
     if kind == "identity":
         return lo, hi
     if kind in ("month", "day"):
@@ -558,13 +586,20 @@ def _probe_bounds(kind: str, p: int | None, lo, hi):
         def _f(v):
             # explicit zero-padding, NOT strftime: glibc's %Y prints
             # year 999 as '999' while Spark's yyyy records '0999' —
-            # the lexical compare would then mis-prune (review finding)
+            # the lexical compare would then mis-prune
             s = f"{v.year:04d}-{v.month:02d}"
             return s if kind == "month" else f"{s}-{v.day:02d}"
 
         return _f(lo), _f(hi)
     # truncate: floor both ends to the bin width
     return (lo // p) * p, (hi // p) * p
+
+
+def _local_path(uri: str) -> str:
+    """``input_file_name()`` yields ``file://`` URIs; manifests hold
+    RESOLVED plain paths — the form both sides of every file-set
+    comparison must take."""
+    return str(Path(unquote(urlparse(uri).path)).resolve())
 
 
 def _write_commit_files(df: DataFrame, table_dir: str) -> list[str]:
@@ -575,6 +610,33 @@ def _write_commit_files(df: DataFrame, table_dir: str) -> list[str]:
     # symlinked cwd would otherwise make the set difference match
     # nothing — every matched key silently kept AND rewritten
     return [str(p.resolve()) for p in commit_dir.glob("*.parquet")]
+
+
+def _write_clustered(
+    df: DataFrame,
+    table_dir: str,
+    spec: list[str],
+    cluster_partitions: int | None = None,
+) -> tuple[list[str], dict[str, dict[str, list]] | None]:
+    """Write one commit's data files and return ``(files, stats)``.
+    Under a non-empty spec the batch is range-clustered on the spec's
+    DERIVED partition values (month string, bucket int, ...) so each
+    file holds a contiguous value range — tight min/max bounds — and
+    the per-file bounds are collected; with no spec, ``stats`` is
+    None. ``cluster_partitions`` pins the clustered file count; the
+    default lets AQE size range partitions to target bytes."""
+    if spec:
+        _check_spec_types(df, spec)
+        cols = [F.asc(_derived_expr(k)) for k in spec]
+        df = (
+            df.repartitionByRange(cluster_partitions, *cols)
+            if cluster_partitions
+            else df.repartitionByRange(*cols)
+        )
+    files = _write_commit_files(df, table_dir)
+    if not spec:
+        return files, None
+    return files, _collect_file_stats(df.sparkSession, files, spec)
 
 
 def read_version(
@@ -607,8 +669,6 @@ def _collect_file_stats(
     Transform spec keys record bounds of the DERIVED value (month
     string, bucket int, ...) under the transform string itself.
     """
-    from urllib.parse import unquote, urlparse
-
     aggs = []
     for i, k in enumerate(keys):
         e = _derived_expr(k)
@@ -628,14 +688,13 @@ def _collect_file_stats(
         # None for non-JSON-native types — NOT str() (docstring above)
         return v if isinstance(v, (int, float, str)) or v is None else None
 
-    stats: dict[str, dict[str, list]] = {}
-    for r in rows:
-        path = str(Path(unquote(urlparse(r["__file__"]).path)).resolve())
-        stats[path] = {
+    return {
+        _local_path(r["__file__"]): {
             k: [_jsonable(r[f"__min_{i}"]), _jsonable(r[f"__max_{i}"])]
             for i, k in enumerate(keys)
         }
-    return stats
+        for r in rows
+    }
 
 
 def commit_append(
@@ -646,41 +705,20 @@ def commit_append(
 
     PARTITION-SPEC-AWARE: when the table's active spec (see
     :func:`evolve_partition_spec`) is non-empty, the batch is
-    range-clustered on the spec keys before writing (contiguous value
-    ranges per file — tight min/max bounds) and per-file bounds are
-    recorded in the manifest for :func:`read_pruned`. Files committed
-    under OLDER specs are untouched — evolution is rewrite-free; they
-    simply never prune (conservative, always correct).
-    ``cluster_partitions`` pins the clustered file count; the default
-    lets AQE size range partitions to target bytes (the right call for
-    production commits — tests and governance drives pin it)."""
+    range-clustered on the spec keys before writing and per-file
+    bounds are recorded in the manifest for :func:`read_pruned`
+    (:func:`_write_clustered`). Files committed under OLDER specs are
+    untouched — evolution is rewrite-free; they simply never prune
+    (conservative, always correct). ``cluster_partitions`` pins the
+    clustered file count; the default lets AQE size range partitions
+    to target bytes (the right call for production commits — tests
+    and governance drives pin it)."""
     _require_absolute(table_dir)
     Path(table_dir).mkdir(parents=True, exist_ok=True)
     prev = latest_version(table_dir)
-    segments, removed = _maybe_coalesce_segments(
-        table_dir, *_base_refs(table_dir, prev)
-    )
-    spec = (
-        list(_load_raw(table_dir, prev).get("spec", [])) if prev else []
-    )
-    if spec:
-        _check_spec_types(df, spec)
-        cols = [F.asc(_derived_expr(k)) for k in spec]
-        df = (
-            df.repartitionByRange(cluster_partitions, *cols)
-            if cluster_partitions
-            else df.repartitionByRange(*cols)
-        )
-    new_files = _write_commit_files(df, table_dir)
-    stats = (
-        _collect_file_stats(df.sparkSession, new_files, spec)
-        if spec
-        else None
-    )
-    # one segment for this commit's files; prior segments carry by
-    # reference — the manifest write is O(changed), never O(table)
-    seg = _write_segment(table_dir, new_files, stats)
-    _publish(table_dir, prev + 1, segments + [seg], removed, spec=spec)
+    spec = _spec(table_dir, prev)
+    files, stats = _write_clustered(df, table_dir, spec, cluster_partitions)
+    _commit(table_dir, prev, spec, files, stats)
     return prev + 1
 
 
@@ -695,10 +733,9 @@ def evolve_partition_spec(table_dir: str, keys: list[str]) -> int:
     rewrite is a separate, optional compaction decision (see
     ``sources/layout.py``), never a prerequisite.
 
-    Returns the new version number. Raises on an empty key list (use
-    ``keys=[]`` semantics via a fresh table instead: un-evolving is
-    publishing a spec of ``[]`` explicitly not supported to keep the
-    audit trail of manifests monotone)."""
+    Returns the new version number. Raises on an empty key list:
+    un-evolving to a spec of ``[]`` is not supported, which keeps the
+    audit trail of manifests monotone (use a fresh table instead)."""
     if not keys:
         raise ValueError(
             "evolve_partition_spec needs at least one clustering key"
@@ -712,8 +749,7 @@ def evolve_partition_spec(table_dir: str, keys: list[str]) -> int:
             f"{table_dir} has no published version to evolve — commit "
             "data first (the spec rides on manifests)"
         )
-    segments, removed = _base_refs(table_dir, prev)
-    _publish(table_dir, prev + 1, segments, removed, spec=list(keys))
+    _commit(table_dir, prev, list(keys))
     return prev + 1
 
 
@@ -742,42 +778,25 @@ def rewrite_to_spec(
     prev = latest_version(table_dir)
     if prev == 0:
         raise ValueError(f"{table_dir} has no published version")
-    spec, stats = _manifest_meta(table_dir, prev)
+    d = _resolved(table_dir, prev)
+    spec, stats = d["spec"], d["file_stats"]
     if not spec:
         raise ValueError(
             f"{table_dir} has no active partition spec — evolve one "
             "first (rewrite_to_spec is the governance follow-up)"
         )
-    files = _read_manifest(table_dir, prev)
     statless = [
-        f
-        for f in files
-        if any(k not in stats.get(f, {}) for k in spec)
+        f for f in d["files"] if any(k not in stats.get(f, {}) for k in spec)
     ]
     if not statless:
         return prev, 0
-    df = spark.read.parquet(*statless)
-    _check_spec_types(df, spec)
-    cols = [F.asc(_derived_expr(k)) for k in spec]
-    df = (
-        df.repartitionByRange(cluster_partitions, *cols)
-        if cluster_partitions
-        else df.repartitionByRange(*cols)
+    files, new_stats = _write_clustered(
+        spark.read.parquet(*statless), table_dir, spec, cluster_partitions
     )
-    new_files = _write_commit_files(df, table_dir)
     # rewritten files become tombstones against their old segments;
     # the rewrite output is one fresh segment with tight bounds. Kept
     # files never move — their segments (and stats) carry by reference.
-    segments, removed = _maybe_coalesce_segments(
-        table_dir, *_base_refs(table_dir, prev)
-    )
-    seg = _write_segment(
-        table_dir, new_files, _collect_file_stats(spark, new_files, spec)
-    )
-    segments, removed = _compact_refs(
-        table_dir, segments + [seg], removed + statless
-    )
-    _publish(table_dir, prev + 1, segments, removed, spec=spec)
+    _commit(table_dir, prev, spec, files, new_stats, replaced=statless)
     return prev + 1, len(statless)
 
 
@@ -793,7 +812,6 @@ def _prune(
     by it (pre-evolution commits — conservative, always correct)."""
     kept = []
     for f in files:
-        skip = False
         for s, (plo, phi) in probes.items():
             b = stats.get(f, {}).get(s)
             if b is None or b[0] is None or b[1] is None:
@@ -810,9 +828,8 @@ def _prune(
                     "key's native kind"
                 )
             if b[1] < plo or b[0] > phi:
-                skip = True
                 break
-        if not skip:
+        else:
             kept.append(f)
     return kept
 
@@ -840,61 +857,14 @@ def _range_probes(
     return probes
 
 
-def prune_files(
-    table_dir: str,
-    key: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """Manifest-level file pruning for ``key BETWEEN lo AND hi`` where
-    ``key`` is a SOURCE column: files whose recorded bounds (under the
-    identity entry and/or any monotone TRANSFORM entry of ``key`` —
-    hidden partitioning) provably exclude the range are skipped; files
-    with no recorded bounds are kept conservatively. The caller
-    filters on the source column and never names the transform —
-    pruning through ``month(ts)`` from a plain ``ts`` range is the
-    hidden-partitioning contract. Returns ``(kept_files,
-    total_files)``. Pure manifest arithmetic — no Spark job, no file
-    I/O beyond the JSON manifest; at 100 TB this is the planning-time
-    skip that turns a point/range query into an O(matching-files) scan.
-    """
-    _require_absolute(table_dir)
-    v = latest_version(table_dir) if version is None else version
-    files = _read_manifest(table_dir, v)
-    spec, stats = _manifest_meta(table_dir, v)
-    probes = _range_probes(spec, stats, key, lo, hi)
-    return _prune(files, stats, probes), len(files)
-
-
-def prune_files_eq(
-    table_dir: str,
-    key: str,
-    value,
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """Manifest-level file pruning for the point predicate ``key =
-    value``: every monotone entry prunes with the degenerate range
-    ``[value, value]`` AND every ``bucket(N, key)`` entry prunes by
-    hashing the probe value into its bucket — the equality-lookup half
-    of hidden partitioning (a hash bucket cannot serve ranges, but a
-    point probe lands in exactly one bucket). Same conservative
-    no-bounds-keeps-the-file rule as :func:`prune_files`."""
-    _require_absolute(table_dir)
-    v = latest_version(table_dir) if version is None else version
-    files = _read_manifest(table_dir, v)
-    spec, stats = _manifest_meta(table_dir, v)
-    probes = _eq_probes(spec, stats, key, value)
-    return _prune(files, stats, probes), len(files)
-
-
 def _eq_probes(
     spec: list[str], stats: dict, key: str, value
 ) -> dict[str, tuple]:
     """Probe set for ``key = value``: every monotone entry with the
-    degenerate range plus every ``bucket(N, key)`` entry with the
-    probe value's own bucket (shared by :func:`prune_files_eq` and
-    the conjunctive pruner)."""
+    degenerate range ``[value, value]`` plus every ``bucket(N, key)``
+    entry with the probe value's own bucket — the equality-lookup half
+    of hidden partitioning (a hash bucket cannot serve ranges, but a
+    point probe lands in exactly one bucket)."""
     probes = _range_probes(spec, stats, key, value, value)
     for s in spec:
         kind, p, src = _parse_spec_key(s)
@@ -914,77 +884,18 @@ def _eq_probes(
     return probes
 
 
-def read_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    key: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Snapshot read of ``key BETWEEN lo AND hi`` with manifest-level
-    file skipping (:func:`prune_files`) plus the residual row filter —
-    exactness never depends on the pruning (bounds only ever EXCLUDE
-    files that provably hold no matching row). The residual filter also
-    reaches the parquet scan as a pushed predicate, so kept files still
-    row-group-skip on their footers."""
-    kept, _total = prune_files(table_dir, key, lo, hi, version)
-    if not kept:
-        # empty result with the right schema: scan nothing but keep the
-        # manifest's column shape via an all-files schema-only read
-        v = latest_version(table_dir) if version is None else version
-        empty = spark.read.parquet(*_read_manifest(table_dir, v)).limit(0)
-        return empty.filter(F.col(key).between(lo, hi))
-    return spark.read.parquet(*kept).filter(F.col(key).between(lo, hi))
-
-
-def read_pruned_eq(
-    spark: SparkSession,
-    table_dir: str,
-    key: str,
-    value,
-    version: int | None = None,
-) -> DataFrame:
-    """Snapshot read of ``key = value`` with manifest-level file
-    skipping through every entry of ``key`` — including hash buckets
-    (:func:`prune_files_eq`) — plus the residual row filter, so
-    exactness never depends on the pruning. The residual equality also
-    reaches the parquet scan as a pushed predicate."""
-    kept, _total = prune_files_eq(table_dir, key, value, version)
-    if not kept:
-        v = latest_version(table_dir) if version is None else version
-        empty = spark.read.parquet(*_read_manifest(table_dir, v)).limit(0)
-        return empty.filter(F.col(key) == F.lit(value))
-    return spark.read.parquet(*kept).filter(F.col(key) == F.lit(value))
-
-
-def prune_files_conj(
-    table_dir: str,
-    preds: list[tuple],
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """CONJUNCTIVE manifest pruning — the composite-spec read path: a
-    file survives only if EVERY predicate can match it, so each
-    predicate prunes through its own spec dimension independently and
-    the kept set is the intersection. With a composite spec like
-    ``["month(ts)", "bucket(8, key)"]`` a query carrying both a time
-    range and a key equality skips through BOTH: the month entry
-    drops out-of-range months, the bucket entry drops wrong-bucket
-    files inside the range — each dimension alone keeps strictly more.
-
-    ``preds`` entries are ``("between", key, lo, hi)`` or
-    ``("eq", key, value)`` over SOURCE columns — query authors still
-    never name a transform. Two predicates over the same key simply
-    intersect (e.g. two ranges). Same conservative rule per predicate
-    as the single-key pruners: a file with no recorded bounds under a
-    predicate's entries is never excluded by that predicate. Pure
-    manifest arithmetic, no Spark job. Returns ``(kept_files,
-    total_files)``."""
+def _pruned(
+    table_dir: str, preds: list[tuple], version: int | None
+) -> tuple[list[str], list[str]]:
+    """``(kept_files, all_files)`` at ``version`` under the conjunction
+    ``preds``, resolving the manifest once. Each predicate prunes
+    through its own spec entries and the kept set is the intersection."""
     _require_absolute(table_dir)
-    v = latest_version(table_dir) if version is None else version
-    files = _read_manifest(table_dir, v)
-    spec, stats = _manifest_meta(table_dir, v)
-    kept = files
+    d = _resolved(
+        table_dir, latest_version(table_dir) if version is None else version
+    )
+    spec, stats = d["spec"], d["file_stats"]
+    kept = d["files"]
     for pred in preds:
         op = pred[0]
         if op == "between":
@@ -995,42 +906,73 @@ def prune_files_conj(
             probes = _eq_probes(spec, stats, key, value)
         else:
             raise ValueError(
-                f"prune_files_conj: unknown predicate op {op!r} — "
+                f"prune_files: unknown predicate op {op!r} — "
                 "supported: ('between', key, lo, hi), ('eq', key, value)"
             )
         kept = _prune(kept, stats, probes)
+    return kept, d["files"]
+
+
+def prune_files(
+    table_dir: str,
+    preds: list[tuple],
+    version: int | None = None,
+) -> tuple[list[str], int]:
+    """Manifest-level file pruning under a CONJUNCTION of SOURCE-column
+    predicates, each ``("between", key, lo, hi)`` or ``("eq", key,
+    value)``; a single-key filter is a one-element list. A file
+    survives only if EVERY predicate can match it:
+
+    - a range prunes through the identity entry of ``key`` and every
+      monotone TRANSFORM entry of it (month/day/truncate) — pruning
+      through ``month(ts)`` from a plain ``ts`` range is the hidden-
+      partitioning contract; query authors never name a transform;
+    - an equality prunes like the degenerate range ``[value, value]``
+      AND through every ``bucket(N, key)`` entry by hashing the probe
+      value into its bucket;
+    - with a composite spec like ``["month(ts)", "bucket(8, key)"]``
+      a time range AND a key equality skip through BOTH entries — each
+      dimension alone keeps strictly more. Two predicates over the
+      same key simply intersect.
+
+    Files with no recorded bounds under a predicate's entries are never
+    excluded by it (pre-evolution commits — conservative, always
+    correct). Returns ``(kept_files, total_files)``. Pure manifest
+    arithmetic — no Spark job, no file I/O beyond the JSON manifest; at
+    100 TB this is the planning-time skip that turns a point/range
+    query into an O(matching-files) scan."""
+    kept, files = _pruned(table_dir, preds, version)
     return kept, len(files)
 
 
-def read_pruned_conj(
+def read_pruned(
     spark: SparkSession,
     table_dir: str,
     preds: list[tuple],
     version: int | None = None,
 ) -> DataFrame:
-    """Snapshot read under a CONJUNCTION of source-column predicates
-    with composite-spec manifest pruning (:func:`prune_files_conj`)
-    plus the residual AND filter — exactness never depends on the
-    pruning, and the residual conjunction reaches the parquet scan as
-    pushed predicates for row-group skipping inside kept files."""
-
-    def _residual(df: DataFrame) -> DataFrame:
-        cond = F.lit(True)
-        for pred in preds:
-            if pred[0] == "between":
-                _op, key, lo, hi = pred
-                cond = cond & F.col(key).between(lo, hi)
-            else:
-                _op, key, value = pred
-                cond = cond & (F.col(key) == F.lit(value))
-        return df.filter(cond)
-
-    kept, _total = prune_files_conj(table_dir, preds, version)
-    if not kept:
-        v = latest_version(table_dir) if version is None else version
-        empty = spark.read.parquet(*_read_manifest(table_dir, v)).limit(0)
-        return _residual(empty)
-    return _residual(spark.read.parquet(*kept))
+    """Snapshot read under a conjunction of source-column predicates
+    (the forms :func:`prune_files` takes) with manifest-level file
+    skipping plus the residual AND filter — exactness never depends on
+    the pruning (bounds only ever EXCLUDE files that provably hold no
+    matching row). The residual also reaches the parquet scan as
+    pushed predicates, so kept files still row-group-skip on their
+    footers."""
+    kept, files = _pruned(table_dir, preds, version)
+    # an empty kept set still returns the manifest's column shape: a
+    # schema-only read of all files that scans nothing
+    df = (
+        spark.read.parquet(*kept)
+        if kept
+        else spark.read.parquet(*files).limit(0)
+    )
+    conds = [
+        F.col(p[1]).between(p[2], p[3])
+        if p[0] == "between"
+        else F.col(p[1]) == F.lit(p[2])
+        for p in preds
+    ]
+    return df.filter(reduce(operator.and_, conds)) if conds else df
 
 
 def commit_merge_keys(
@@ -1086,62 +1028,29 @@ def commit_merge_keys(
     # row — both silently survive the merge
     # bounded collect: one row per data file that contains a matched
     # key — the COW working set, never row-scaled
-    affected = [
-        r["__file__"]
+    affected_set = {
+        _local_path(r["__file__"])
         for r in _null_safe_join(cur, keys, key_cols, "left_semi")
         .select("__file__")
         .distinct()
         .collect()
-    ]
-    # input_file_name() yields file:// URIs; manifests hold resolved
-    # plain paths — resolve both sides before differencing
-    from urllib.parse import unquote, urlparse
-
-    affected_set = {
-        str(Path(unquote(urlparse(a).path)).resolve()) for a in affected
     }
-    prior_resolved = {f: str(Path(f).resolve()) for f in prior_files}
     replaced = [
-        f for f in prior_files if prior_resolved[f] in affected_set
+        f for f in prior_files if str(Path(f).resolve()) in affected_set
     ]
-    survivors = (
-        _null_safe_join(
+    merged = batch
+    if affected_set:
+        survivors = _null_safe_join(
             spark.read.parquet(*sorted(affected_set)), keys, key_cols,
             "left_anti",
         )
-        if affected_set
-        else None
-    )
-    merged = (
-        survivors.unionByName(batch.select(*survivors.columns))
-        if survivors is not None
-        else batch
-    )
-    spec = list(_load_raw(table_dir, prev).get("spec", []))
-    if spec:
-        # transform-aware: cluster by the DERIVED partition values
-        # (month string, bucket int, ...), same as commit_append
-        _check_spec_types(merged, spec)
-        merged = merged.repartitionByRange(
-            *[F.asc(_derived_expr(k)) for k in spec]
-        )
-    new_files = _write_commit_files(merged, table_dir)
+        merged = survivors.unionByName(batch.select(*survivors.columns))
+    spec = _spec(table_dir, prev)
     # untouched files (and their bounds) carry by SEGMENT reference;
     # replaced files become tombstones; the COW output is one fresh
-    # segment with fresh bounds when a spec is active (re-clustered
-    # above, so its bounds stay tight)
-    seg = _write_segment(
-        table_dir,
-        new_files,
-        _collect_file_stats(spark, new_files, spec) if spec else None,
-    )
-    segments, removed = _maybe_coalesce_segments(
-        table_dir, *_base_refs(table_dir, prev)
-    )
-    segments, removed = _compact_refs(
-        table_dir, segments + [seg], removed + replaced
-    )
-    _publish(table_dir, prev + 1, segments, removed, spec=spec)
+    # segment, re-clustered with fresh bounds when a spec is active
+    files, stats = _write_clustered(merged, table_dir, spec)
+    _commit(table_dir, prev, spec, files, stats, replaced=replaced)
     return prev + 1
 
 
@@ -1158,8 +1067,15 @@ def expire_versions(table_dir: str, keep_last: int = 1) -> tuple[int, int]:
     manifest presence, not this count. Retained versions are
     untouched — their manifests pin their files, so reads of any kept
     version are unaffected (the retention/undrop trade every table
-    format documents). Driver-side work is manifest-scaled (file
-    lists), never row-scaled."""
+    format documents). ``keep_last`` must be at least 1: retaining no
+    version would delete every manifest and data file of the table.
+    Driver-side work is manifest-scaled (file lists), never
+    row-scaled."""
+    if keep_last < 1:
+        raise ValueError(
+            f"expire_versions needs keep_last >= 1, got {keep_last} — "
+            "retaining no version would delete the whole table"
+        )
     latest = latest_version(table_dir)
     if latest == 0:
         return (0, 0)
@@ -1233,17 +1149,15 @@ def stage_append(df: DataFrame, table_dir: str, branch: str) -> int:
     _require_absolute(table_dir)
     Path(table_dir).mkdir(parents=True, exist_ok=True)
     sp = _staging_path(table_dir, branch)
+    busy = (
+        f"branch {branch!r} already has staged files — publish or "
+        "discard them first"
+    )
     if sp.exists():
-        raise ConcurrentCommitError(
-            f"branch {branch!r} already has staged files — publish or "
-            "discard them first"
-        )
+        raise ConcurrentCommitError(busy)
     files = _write_commit_files(df, table_dir)
     _exclusive_write(
-        sp,
-        json.dumps({"branch": branch, "files": sorted(files)}),
-        f"branch {branch!r} already has staged files — publish or "
-        "discard them first",
+        sp, json.dumps({"branch": branch, "files": sorted(files)}), busy
     )
     return len(files)
 
@@ -1259,21 +1173,16 @@ def read_staged(spark: SparkSession, table_dir: str, branch: str) -> DataFrame:
 def _retained_files(table_dir: str) -> set[str]:
     """Every data file referenced by any still-published manifest."""
     referenced: set[str] = set()
-    d = Path(table_dir)
-    for mp in d.glob("v*.json"):
-        if mp.stem[1:].isdigit():
-            try:
-                referenced.update(
-                    _resolved(table_dir, int(mp.stem[1:]))["files"]
-                )
-            except FileNotFoundError:
-                # concurrent expire_versions unlinked it between glob
-                # and read: an expired version's still-live files are
-                # carried forward by retained manifests (commits are
-                # by-reference — _resolved skips a concurrently
-                # GC'd segment on the same argument), so skipping it
-                # loses nothing
-                continue
+    for v in _versions(table_dir):
+        try:
+            referenced.update(_resolved(table_dir, v)["files"])
+        except FileNotFoundError:
+            # concurrent expire_versions unlinked it between glob and
+            # read: an expired version's still-live files are carried
+            # forward by retained manifests (commits are by-reference —
+            # _union_segments skips a concurrently GC'd segment on the
+            # same argument), so skipping it loses nothing
+            continue
     return referenced
 
 
@@ -1281,15 +1190,15 @@ def publish_staged(table_dir: str, branch: str) -> int:
     """Atomically publish the staged append as the next version: the
     new manifest references the current latest version's files PLUS
     the staged files (append semantics compose with any commits that
-    landed between stage and publish), via the same exclusive
-    :func:`_publish` every commit uses. The staging manifest is
-    removed AFTER the publish; if a previous attempt crashed in that
-    window (version published, staging manifest left behind), the
-    retry detects the staged files already referenced by SOME retained
-    manifest (not just the latest — an intervening COW merge moves
-    them out of the head version without unpublishing them), removes
-    the leftover marker, and returns the current version — idempotent,
-    never double-appending. If retention has meanwhile EXPIRED the
+    landed between stage and publish), via the same :func:`_commit`
+    every commit uses. The staging manifest is removed AFTER the
+    publish; if a previous attempt crashed in that window (version
+    published, staging manifest left behind), the retry detects the
+    staged files already referenced by SOME retained manifest (not
+    just the latest — an intervening COW merge moves them out of the
+    head version without unpublishing them), removes the leftover
+    marker, and returns the current version — idempotent, never
+    double-appending. If retention has meanwhile EXPIRED the
     version holding the staged files (some staged files no longer on
     disk), the retry raises instead of publishing a manifest that
     references deleted files — discard the stale marker. Returns the
@@ -1340,17 +1249,8 @@ def publish_staged(table_dir: str, branch: str) -> int:
     # spec carries forward; staged files were written by stage_append
     # without spec clustering, so they get no bounds (conservative —
     # they scan, never mis-prune)
-    wap_spec = (
-        list(_load_raw(table_dir, prev).get("spec", [])) if prev else []
-    )
-    base_segments, base_removed = _maybe_coalesce_segments(
-        table_dir, *_base_refs(table_dir, prev)
-    )
-    seg = _write_segment(table_dir, staged)
-    _publish(
-        table_dir, prev + 1, base_segments + [seg], base_removed,
-        spec=wap_spec,
-    )
+    wap_spec = _spec(table_dir, prev)
+    base_segments, base_removed = _commit(table_dir, prev, wap_spec, staged)
     # defense in depth against a concurrent discard_staged (contract
     # violation): if any staged file vanished between the check above
     # and the claim, neutralize the just-claimed manifest and raise
@@ -1404,18 +1304,17 @@ def publish_staged(table_dir: str, branch: str) -> int:
                 "files and needs manual repair (re-commit the data, "
                 "then expire the damaged versions)"
             )
-        tmp = mp.with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
         # the tombstone references the PRIOR version's segments only —
         # never the staged-files segment whose data vanished
-        with open(tmp, "w") as f:
-            f.write(
+        os.replace(
+            _durable_temp(
+                mp,
                 _manifest_payload(
                     prev + 1, base_segments, base_removed, wap_spec
-                )
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, mp)
+                ),
+            ),
+            mp,
+        )
         _fsync_dir(mp.parent)
         raise ConcurrentCommitError(
             f"staged file(s) for branch {branch!r} were deleted during "

@@ -162,15 +162,16 @@ def stream_gold_maintenance(
     a late batch simply recomputes forward from its own min date using
     the silver accumulated so far.
 
-    Scale note: a parquet keyed upsert rewrites the partitions its keys
-    touch (Delta MERGE rewrites the matched files — same shape).
+    Scale note: a parquet keyed upsert rewrites the partitions that
+    hold a batch key and appends to the other partitions it touches
+    (Delta MERGE rewrites the matched files — same shape).
     ``partition_by_year=True`` partitions BOTH tables by a derived
     ``p_year = year(date)`` column (functionally determined by the
-    (symbol, date) key, so it joins the upsert key and the prior-scan
-    is skipped)
-    — a daily batch then rewrites O(touched years), not the whole
-    history. Measured at sf0.1 (BASELINE.md round-8): a one-day late
-    patch against 7 years of accumulated history (533k silver rows)
+    (symbol, date) key, so it joins the upsert key) — a daily batch
+    then rewrites O(touched years), not the whole history. The
+    upsert's key probe still scans the key columns of every year.
+    Measured at sf0.1 (BASELINE.md round-8): a one-day late patch
+    against 7 years of accumulated history (533k silver rows)
     rewrites 2.31 of 18.81 MB — only the touched-year partitions of
     silver+gold, 12 of 84 files — vs a full 18.99 MB rewrite
     unpartitioned, 8.2× less write I/O. Wall at sf0.1 is

@@ -262,7 +262,7 @@ def test_read_pruned_pushes_residual_filter_to_scan(spark, tmp_path):
         cluster_partitions=4,
     )
     plan = (
-        read_pruned(spark, tdir, "k", 1100, 1200)
+        read_pruned(spark, tdir, [("between", "k", 1100, 1200)])
         .select("v")
         ._jdf.queryExecution()
         .executedPlan()
@@ -296,17 +296,17 @@ def test_multi_key_spec_clusters_and_prunes_on_lead_key(spark, tmp_path):
     )
     # bounds recorded for BOTH spec keys; lead-key pruning skips the
     # out-of-range clustered files (5 clustered + statless v1 files)
-    kept_k, total = prune_files(tdir, "k", 100, 150)
+    kept_k, total = prune_files(tdir, [("between", "k", 100, 150)])
     assert len(kept_k) < total
-    got = read_pruned(spark, tdir, "k", 100, 150).count()
+    got = read_pruned(spark, tdir, [("between", "k", 100, 150)]).count()
     assert got == 51
     # second key: v is 0..6 in every clustered file (range clustering
     # on (k, v) gives v the full domain per file), so an out-of-domain
     # range drops ALL clustered files and keeps only the statless v1
     # files — the conservative path
-    kept_v, total_v = prune_files(tdir, "v", 100, 200)
+    kept_v, total_v = prune_files(tdir, [("between", "v", 100, 200)])
     assert len(kept_v) < total_v
-    assert read_pruned(spark, tdir, "v", 100, 200).count() == 0
+    assert read_pruned(spark, tdir, [("between", "v", 100, 200)]).count() == 0
 
 
 def test_two_pass_rank_keeps_null_keyed_rows(spark):
@@ -430,8 +430,8 @@ def test_prune_files_rejects_mixed_kind_bounds(spark, tmp_path):
         cluster_partitions=2,
     )
     with pytest.raises(TypeError, match="native kind"):
-        prune_files(tdir, "s", 100, 200)
-    kept, total = prune_files(tdir, "s", "s00150", "s00160")
+        prune_files(tdir, [("between", "s", 100, 200)])
+    kept, total = prune_files(tdir, [("between", "s", "s00150", "s00160")])
     assert len(kept) < total
 
 
@@ -464,15 +464,15 @@ def test_decimal_spec_key_records_no_bounds_and_scans(spark, tmp_path):
         cluster_partitions=2,
     )
     from market_data_pipeline_databricks_spark.sources.snapshots import (
-        _manifest_meta,
+        _resolved,
     )
 
-    for bounds in _manifest_meta(tdir, 3)[1].values():
+    for bounds in _resolved(tdir, 3)["file_stats"].values():
         assert bounds["d"] == [None, None]
-    kept, total = prune_files(tdir, "d", 10, 20)
+    kept, total = prune_files(tdir, [("between", "d", 10, 20)])
     assert len(kept) == total  # conservative: nothing prunes
     # d in [10, 20] ⇔ id in [40, 80]: only commit 1 (ids 0..99) hits
-    assert read_pruned(spark, tdir, "d", 10, 20).count() == 41
+    assert read_pruned(spark, tdir, [("between", "d", 10, 20)]).count() == 41
 
 
 def test_wap_first_publish_race_unlinks_instead_of_empty_tombstone(

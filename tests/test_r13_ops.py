@@ -7,7 +7,7 @@ Hidden partitioning (sources/snapshots.py): spec entries may be
 Iceberg-style transforms — ``month(col)``, ``day(col)``,
 ``bucket(N, col)``, ``truncate(W, col)`` — and queries keep filtering
 on the SOURCE column; predicate mapping into transform space happens
-at the manifest (prune_files / prune_files_eq).
+at the manifest (prune_files with a between / eq predicate).
 """
 
 from __future__ import annotations
@@ -25,9 +25,7 @@ from market_data_pipeline_databricks_spark.sources.snapshots import (
     commit_append,
     evolve_partition_spec,
     prune_files,
-    prune_files_eq,
     read_pruned,
-    read_pruned_eq,
     rewrite_to_spec,
 )
 
@@ -91,17 +89,17 @@ def test_month_transform_prunes_source_column_range(spark, tmp_path):
     evolve_partition_spec(tdir, ["month(ts)"])
     commit_append(df.filter(F.col("k") % 2 == 1), tdir, cluster_partitions=6)
     lo, hi = dt.datetime(2024, 2, 1), dt.datetime(2024, 2, 29, 23, 59, 59)
-    kept, total = prune_files(tdir, "ts", lo, hi)
+    kept, total = prune_files(tdir, [("between", "ts", lo, hi)])
     assert len(kept) < total  # post-evolution out-of-Feb files skipped
-    got = read_pruned(spark, tdir, "ts", lo, hi).count()
+    got = read_pruned(spark, tdir, [("between", "ts", lo, hi)]).count()
     want = df.filter(F.col("ts").between(lo, hi)).count()
     assert got == want > 0
     # recorded bounds live in transform space under the entry string
     from market_data_pipeline_databricks_spark.sources.snapshots import (
-        _manifest_meta,
+        _resolved,
     )
 
-    stats = _manifest_meta(tdir, 3)[1]
+    stats = _resolved(tdir, 3)["file_stats"]
     bounded = [
         s["month(ts)"] for s in stats.values() if "month(ts)" in s
     ]
@@ -117,7 +115,7 @@ def test_month_probe_requires_temporal_bounds(spark, tmp_path):
     evolve_partition_spec(tdir, ["month(ts)"])
     commit_append(df, tdir, cluster_partitions=4)
     with pytest.raises(TypeError, match="date/datetime"):
-        prune_files(tdir, "ts", "2024-01", "2024-02")
+        prune_files(tdir, [("between", "ts", "2024-01", "2024-02")])
 
 
 def test_bucket_transform_prunes_equality_not_ranges(spark, tmp_path):
@@ -127,13 +125,13 @@ def test_bucket_transform_prunes_equality_not_ranges(spark, tmp_path):
     evolve_partition_spec(tdir, ["bucket(8, k)"])
     commit_append(df.filter(F.col("k") % 2 == 1), tdir, cluster_partitions=8)
     rewrite_to_spec(spark, tdir, cluster_partitions=4)
-    kept, total = prune_files_eq(tdir, "k", 123)
+    kept, total = prune_files(tdir, [("eq", "k", 123)])
     assert len(kept) < total
-    assert read_pruned_eq(spark, tdir, "k", 123).count() == 1
+    assert read_pruned(spark, tdir, [("eq", "k", 123)]).count() == 1
     # a RANGE probe learns nothing from a hash bucket: keeps all files
-    kept_r, total_r = prune_files(tdir, "k", 100, 150)
+    kept_r, total_r = prune_files(tdir, [("between", "k", 100, 150)])
     assert len(kept_r) == total_r
-    n = read_pruned(spark, tdir, "k", 100, 150).count()
+    n = read_pruned(spark, tdir, [("between", "k", 100, 150)]).count()
     assert n == 51
 
 
@@ -147,9 +145,9 @@ def test_truncate_transform_prunes_numeric_bins(spark, tmp_path):
         tdir,
         cluster_partitions=10,
     )
-    kept, total = prune_files(tdir, "k", 1500, 1599)
+    kept, total = prune_files(tdir, [("between", "k", 1500, 1599)])
     assert len(kept) < total
-    got = read_pruned(spark, tdir, "k", 1500, 1599).count()
+    got = read_pruned(spark, tdir, [("between", "k", 1500, 1599)]).count()
     assert got == 100
 
 
@@ -161,12 +159,12 @@ def test_rewrite_to_spec_backfills_transform_bounds(spark, tmp_path):
     v, n = rewrite_to_spec(spark, tdir, cluster_partitions=4)
     assert n == 3
     from market_data_pipeline_databricks_spark.sources.snapshots import (
-        _manifest_meta,
+        _resolved,
     )
 
     assert all(
         "month(ts)" in s and s["month(ts)"][0] is not None
-        for s in _manifest_meta(tdir, v)[1].values()
+        for s in _resolved(tdir, v)["file_stats"].values()
     )
     # pure re-layout: multiset-identical to the pre-rewrite version
     from market_data_pipeline_databricks_spark.sources.snapshots import (
@@ -303,12 +301,13 @@ def test_cow_merge_under_transform_spec_reclusters_and_prunes(
     assert got.count() == 800
     assert got.filter(F.col("v") >= 100).count() == 5
     lo, hi = dt.datetime(2024, 2, 1), dt.datetime(2024, 2, 29, 23, 59, 59)
-    kept, total = prune_files(tdir, "ts", lo, hi, version=v)
+    kept, total = prune_files(tdir, [("between", "ts", lo, hi)], version=v)
     assert len(kept) < total
     want = (
         got.filter(F.col("ts").between(lo, hi)).count()
     )
-    assert read_pruned(spark, tdir, "ts", lo, hi, version=v).count() == want
+    pruned = read_pruned(spark, tdir, [("between", "ts", lo, hi)], version=v)
+    assert pruned.count() == want
 
 
 @pytest.mark.slow
@@ -583,7 +582,7 @@ def test_spec_type_enforcement_at_clustering_sites(spark, tmp_path):
     evolve_partition_spec(t3, ["bucket(8, k)"])
     commit_append(df, t3, cluster_partitions=4)
     with pytest.raises(TypeError, match="probe"):
-        prune_files_eq(t3, "k", 12.0)
+        prune_files(t3, [("eq", "k", 12.0)])
 
 
 def test_probe_bounds_zero_pad_years():

@@ -1,5 +1,5 @@
 """Composite transform specs + conjunctive manifest pruning
-(sources/snapshots.py:prune_files_conj / read_pruned_conj):
+(sources/snapshots.py:prune_files / read_pruned over a predicate list):
 
 - the conjunctive kept set IS the intersection of the per-predicate
   kept sets, and the read equals the plain filtered snapshot read
@@ -24,9 +24,7 @@ from market_data_pipeline_databricks_spark.sources.snapshots import (
     commit_append,
     evolve_partition_spec,
     prune_files,
-    prune_files_conj,
-    prune_files_eq,
-    read_pruned_conj,
+    read_pruned,
 )
 
 
@@ -71,9 +69,9 @@ def _collect(df):
 
 def test_conj_kept_is_intersection_and_read_is_exact(spark, tmp_path):
     td, df = _build(spark, tmp_path)
-    kept_c, total = prune_files_conj(td, PREDS)
-    kept_m, _ = prune_files(td, "ts", PREDS[0][2], PREDS[0][3])
-    kept_b, _ = prune_files_eq(td, "k", 5)
+    kept_c, total = prune_files(td, PREDS)
+    kept_m, _ = prune_files(td, PREDS[:1])
+    kept_b, _ = prune_files(td, [("eq", "k", 5)])
     assert set(kept_c) == set(kept_m) & set(kept_b)
     # both dimensions engage on the clustered layout
     assert len(kept_c) < len(kept_m)
@@ -82,7 +80,7 @@ def test_conj_kept_is_intersection_and_read_is_exact(spark, tmp_path):
     expected = df.filter(
         F.col("ts").between(PREDS[0][2], PREDS[0][3]) & (F.col("k") == 5)
     )
-    assert _collect(read_pruned_conj(spark, td, PREDS)) == _collect(expected)
+    assert _collect(read_pruned(spark, td, PREDS)) == _collect(expected)
 
 
 def test_conj_two_ranges_same_key_intersect(spark, tmp_path):
@@ -91,14 +89,14 @@ def test_conj_two_ranges_same_key_intersect(spark, tmp_path):
         ("between", "ts", dt.datetime(2025, 1, 1), dt.datetime(2025, 4, 30)),
         ("between", "ts", dt.datetime(2025, 3, 1), dt.datetime(2025, 6, 30)),
     ]
-    kept_c, _ = prune_files_conj(td, preds)
-    kept_1, _ = prune_files(td, "ts", *preds[0][2:])
-    kept_2, _ = prune_files(td, "ts", *preds[1][2:])
+    kept_c, _ = prune_files(td, preds)
+    kept_1, _ = prune_files(td, preds[:1])
+    kept_2, _ = prune_files(td, preds[1:])
     assert set(kept_c) == set(kept_1) & set(kept_2)
     expected = df.filter(
         F.col("ts").between(*preds[0][2:]) & F.col("ts").between(*preds[1][2:])
     )
-    assert _collect(read_pruned_conj(spark, td, preds)) == _collect(expected)
+    assert _collect(read_pruned(spark, td, preds)) == _collect(expected)
 
 
 def test_conj_pre_evolution_files_never_excluded(spark, tmp_path):
@@ -107,7 +105,7 @@ def test_conj_pre_evolution_files_never_excluded(spark, tmp_path):
     )
 
     td, _df = _build(spark, tmp_path)
-    kept_c, _total = prune_files_conj(td, PREDS)
+    kept_c, _total = prune_files(td, PREDS)
     # every bound-less pre-evolution file (the v1 manifest) survives
     # every predicate — conservative, always correct
     v1_files = set(_read_manifest(td, 1))
@@ -127,9 +125,9 @@ def test_conj_empty_kept_keeps_schema(spark, tmp_path):
         ("between", "ts", dt.datetime(2031, 1, 1), dt.datetime(2031, 2, 1)),
         ("eq", "k", 5),
     ]
-    kept, _ = prune_files_conj(td, preds)
+    kept, _ = prune_files(td, preds)
     assert kept == []
-    out = read_pruned_conj(spark, td, preds)
+    out = read_pruned(spark, td, preds)
     assert out.columns == ["id", "ts", "k", "v"]
     assert out.count() == 0
 
@@ -137,4 +135,4 @@ def test_conj_empty_kept_keeps_schema(spark, tmp_path):
 def test_conj_unknown_op_raises(spark, tmp_path):
     td, _df = _build(spark, tmp_path)
     with pytest.raises(ValueError, match="unknown predicate op"):
-        prune_files_conj(td, [("lt", "k", 5)])
+        prune_files(td, [("lt", "k", 5)])

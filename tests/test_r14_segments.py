@@ -66,7 +66,8 @@ def test_legacy_inline_manifest_reads_and_migrates(spark, tmp_path):
     }
     (Path(tdir) / "v1.json").write_text(json.dumps(legacy))
     assert set(S._read_manifest(tdir, 1)) == set(files)
-    spec, stats = S._manifest_meta(tdir, 1)
+    d = S._resolved(tdir, 1)
+    spec, stats = d["spec"], d["file_stats"]
     assert spec == ["k"] and set(stats) == set(files)
     v = S.commit_append(_mk(spark, [(3, "c")]).coalesce(1), tdir)
     assert v == 2
@@ -74,7 +75,7 @@ def test_legacy_inline_manifest_reads_and_migrates(spark, tmp_path):
     assert "segments" in man and len(man["segments"]) == 2
     got = {r.k for r in S.read_version(spark, tdir, 2).collect()}
     assert got == {1, 2, 3}
-    _, stats2 = S._manifest_meta(tdir, 2)
+    stats2 = S._resolved(tdir, 2)["file_stats"]
     assert all(stats2[f] == {"k": [1, 2]} for f in files)  # migrated
 
 

@@ -133,6 +133,24 @@ def test_snapshot_commits_match_dict_model(spark, ops):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_expire_versions_rejects_keep_last_below_one(spark, tdir):
+    """keep_last < 1 would retain no version, so every manifest and
+    data file would be unlinked: it must raise before touching the
+    disk, and the table must still read afterwards."""
+    from market_data_pipeline_databricks_spark.sources.snapshots import (
+        expire_versions,
+    )
+
+    commit_append(_mk(spark, [(1, "a")]).coalesce(1), tdir)
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            expire_versions(tdir, keep_last=keep_last)
+    assert latest_version(tdir) == 1
+    assert {r.k: r.v for r in read_version(spark, tdir).collect()} == {
+        1: "a"
+    }
+
+
 @pytest.mark.slow
 def test_expire_versions_keeps_retained_reads_intact(spark, tdir):
     commit_append(_mk(spark, [(1, "a"), (2, "b")]).coalesce(1), tdir)
@@ -318,7 +336,7 @@ def test_evolve_spec_is_rewrite_free_and_clusters_new_commits(spark, tdir):
     )
 
     from market_data_pipeline_databricks_spark.sources.snapshots import (
-        _manifest_meta,
+        _resolved,
         _read_manifest,
     )
 
@@ -334,7 +352,7 @@ def test_evolve_spec_is_rewrite_free_and_clusters_new_commits(spark, tdir):
     commit_append(_mk_kv(spark, 1000, 2000), tdir, cluster_partitions=4)
     new_files = set(_read_manifest(tdir, 3)) - files_v1
     assert len(new_files) == 4
-    stats = _manifest_meta(tdir, 3)[1]
+    stats = _resolved(tdir, 3)["file_stats"]
     assert set(stats) == new_files  # old files carry no bounds
     # range clustering → tight, non-overlapping bounds covering 1000..1999
     bounds = sorted(tuple(stats[f]["k"]) for f in new_files)
@@ -344,10 +362,10 @@ def test_evolve_spec_is_rewrite_free_and_clusters_new_commits(spark, tdir):
     # pruning: a range inside ONE new file's bounds keeps that file
     # plus the 3 statless v1 files
     lo, hi = bounds[0][0], bounds[0][1]
-    kept, total = prune_files(tdir, "k", lo, hi)
+    kept, total = prune_files(tdir, [("between", "k", lo, hi)])
     assert total == 7 and len(kept) == 4
     # exactness: pruned read == full filter
-    got = read_pruned(spark, tdir, "k", lo, hi)
+    got = read_pruned(spark, tdir, [("between", "k", lo, hi)])
     assert got.count() == hi - lo + 1
     full = read_version(spark, tdir).filter(F.col("k").between(lo, hi))
     assert got.exceptAll(full).count() == 0
@@ -363,7 +381,7 @@ def test_pruned_read_empty_range_keeps_schema(spark, tdir):
     commit_append(_mk_kv(spark, 0, 100), tdir)
     evolve_partition_spec(tdir, ["k"])
     commit_append(_mk_kv(spark, 100, 200), tdir, cluster_partitions=2)
-    out = read_pruned(spark, tdir, "k", -50, -10)
+    out = read_pruned(spark, tdir, [("between", "k", -50, -10)])
     assert out.count() == 0
     assert out.columns == ["k", "v"]
 
@@ -385,11 +403,11 @@ def test_cow_merge_preserves_spec_and_recomputes_bounds(spark, tdir):
     commit_merge_keys(spark, tdir, batch, ["k"])
     assert active_spec(tdir) == ["k"]
     # merged result still exact under pruned reads
-    got = read_pruned(spark, tdir, "k", 700, 800)
+    got = read_pruned(spark, tdir, [("between", "k", 700, 800)])
     rows = {(r["k"], r["v"]) for r in got.collect()}
     assert (750, 99) in rows
     assert len(rows) == 101
-    kept, total = prune_files(tdir, "k", 700, 800)
+    kept, total = prune_files(tdir, [("between", "k", 700, 800)])
     assert len(kept) <= total
 
 
@@ -432,18 +450,18 @@ def test_rewrite_to_spec_reclusters_only_statless_files(spark, tdir):
     evolve_partition_spec(tdir, ["k"])
     commit_append(_mk_kv(spark, 1000, 2000), tdir, cluster_partitions=4)
     from market_data_pipeline_databricks_spark.sources.snapshots import (
-        _manifest_meta,
+        _resolved,
         _read_manifest,
     )
 
-    clustered = set(_manifest_meta(tdir, 3)[1])
+    clustered = set(_resolved(tdir, 3)["file_stats"])
     before_rows = {
         (r["k"], r["v"]) for r in read_version(spark, tdir).collect()
     }
     v, n = rewrite_to_spec(spark, tdir, cluster_partitions=4)
     assert v == 4 and n == 3  # exactly the statless v1 files rewrote
     files_v4 = set(_read_manifest(tdir, 4))
-    stats_v4 = _manifest_meta(tdir, 4)[1]
+    stats_v4 = _resolved(tdir, 4)["file_stats"]
     # pre-clustered files carried by reference, stats intact
     assert clustered <= files_v4
     assert clustered <= set(stats_v4)
@@ -457,9 +475,10 @@ def test_rewrite_to_spec_reclusters_only_statless_files(spark, tdir):
     assert read_version(spark, tdir).count() == 2000
     # pruning now skips on BOTH halves; a mid-range query keeps a
     # strict subset
-    kept, total = prune_files(tdir, "k", 450, 550)
+    kept, total = prune_files(tdir, [("between", "k", 450, 550)])
     assert len(kept) < total
-    assert read_pruned(spark, tdir, "k", 450, 550).count() == 101
+    got = read_pruned(spark, tdir, [("between", "k", 450, 550)])
+    assert got.count() == 101
     # idempotent: nothing statless remains
     v2, n2 = rewrite_to_spec(spark, tdir)
     assert (v2, n2) == (4, 0)
@@ -551,7 +570,9 @@ def test_partition_evolution_model(spark, ops, seed):
         lo, hi = 1, max(3, next_k // 2)
         got_p = sorted(
             (r.k, r.v)
-            for r in read_pruned(spark, d, "k", lo, hi).collect()
+            for r in read_pruned(
+                spark, d, [("between", "k", lo, hi)]
+            ).collect()
         )
         assert got_p == sorted(r for r in model if lo <= r[0] <= hi)
         # version chain is hole-free and every version still reads
@@ -560,7 +581,7 @@ def test_partition_evolution_model(spark, ops, seed):
             assert (Path(d) / f"v{v}.json").exists(), v
             read_version(spark, d, v).count()
         # pruning never keeps more files than the manifest lists
-        kept, total = prune_files(d, "k", lo, hi)
+        kept, total = prune_files(d, [("between", "k", lo, hi)])
         assert len(kept) <= total
     finally:
         shutil.rmtree(d, ignore_errors=True)
