@@ -10,6 +10,12 @@ Null semantics preserved exactly (SURVEY §2.5): first row per symbol has
 NULL return; STDDEV_SAMP yields NULL for <2 non-null inputs; all-NULL FX
 volume yields NULL average throughout.
 
+``computed_at`` is when this row's features were last computed. The
+pipeline appends a day's new rows and rebuilds only the symbols whose
+history changed (``pipeline.run_gold``), so rows of one symbol can carry
+different stamps; the reference, which rebuilds gold in full, stamps
+every row with the run time.
+
 Scale: one shuffle on ``symbol`` serves all three window functions
 (Catalyst computes them in a single WindowExec over one sort). A symbol
 is a bounded daily series (≤~250 rows/yr), so per-partition memory is

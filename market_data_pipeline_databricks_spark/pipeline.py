@@ -4,6 +4,17 @@ The reference orchestrates these as 4 Databricks Job tasks passing state
 only through Delta tables (SURVEY §3). Here each stage is a function and
 tables remain the only inter-stage contract, so stages can be rerun
 independently (e.g. re-ingest a backfill batch, then rebuild downstream).
+
+Bronze is upserted by key (``upsert_by_key``). Silver, rejected and gold
+follow their source table's files: each keeps a lineage record,
+``_lineage.json``, of the source files every partition was built from
+and the files it holds (``sources/lineage.py``). A stage diffs the
+directory listings against it, appends the rows derived from new source
+files to a partition that only gained files, and rebuilds a partition
+whose source files were replaced. A partition that no longer matches its
+record (a crash between publish and record write, another writer) is
+rebuilt too, and a table without a record is rebuilt whole, so a stage
+run twice, or after any failure, heals its table.
 """
 
 from __future__ import annotations
@@ -23,11 +34,11 @@ from market_data_pipeline_databricks_spark.operators import quality as Q
 from market_data_pipeline_databricks_spark.operators import silver as S
 from market_data_pipeline_databricks_spark.sources import (
     append_table,
-    overwrite_table,
     read_prices_csv,
     read_table,
     upsert_by_key,
 )
+from market_data_pipeline_databricks_spark.sources import lineage as L
 from market_data_pipeline_databricks_spark.sources.writers import coalesce_by_bytes
 
 
@@ -45,21 +56,29 @@ def run_bronze(
 
 
 def run_silver(spark: SparkSession, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
-    """Rebuild silver and rejected from bronze in one shuffle-free pass
-    each. No dedup: bronze is unique on ``(symbol, date)``, because
-    ``bronze_batch`` drops NULL and duplicate keys and the bronze upsert
-    replaces a matched key (``operators/silver.py:split_silver``).
+    """Bring silver and rejected up to date with bronze, one shuffle-free
+    ``split_silver`` pass each. A bronze row lands in exactly one of
+    them and depends on no other row: no dedup is needed, because
+    bronze is unique on ``(symbol, date)`` (``bronze_batch`` drops NULL
+    and duplicate keys and the bronze upsert replaces a matched key).
 
-    The scan is coalesced by bronze's bytes (``coalesce_by_bytes``):
-    once appends have given a symbol several bronze files, the scan's
-    splits would otherwise write one silver file per symbol and split."""
-    bronze_df = read_table(spark, cfg.warehouse_dir, cfg.bronze_table)
-    bronze_df = coalesce_by_bytes(bronze_df, [Path(cfg.table_path(cfg.bronze_table))])
-    valid, rejected = S.split_silver(bronze_df)
-    overwrite_table(valid, cfg.warehouse_dir, cfg.silver_table,
-                    schemas.PARTITION_COLS[cfg.silver_table])
-    overwrite_table(rejected, cfg.warehouse_dir, cfg.rejected_table,
-                    schemas.PARTITION_COLS[cfg.rejected_table])
+    Each table follows bronze's files through its lineage record
+    (``sources/lineage.py``): the rows of new bronze files in a
+    partition bronze appended to are split and appended as new files;
+    a partition bronze rewrote, or one whose files or record no longer
+    match, is rebuilt from all of its bronze files; a partition bronze
+    dropped is removed. With no record every partition is rebuilt.
+
+    The scan is coalesced by the bytes it reads (``coalesce_by_bytes``):
+    a scan's splits mix the files of every partition, and would
+    otherwise write one file per partition and split."""
+    bronze = Path(cfg.table_path(cfg.bronze_table))
+    for table, pick in ((cfg.silver_table, 0), (cfg.rejected_table, 1)):
+        path, cols = Path(cfg.table_path(table)), schemas.PARTITION_COLS[table]
+        ch = L.changes(bronze, path, cols)
+        paths = ch.dirs(ch.rebuilt) + ch.new_files()
+        src = read_table(spark, cfg.warehouse_dir, cfg.bronze_table, paths)
+        L.publish(S.split_silver(coalesce_by_bytes(src, paths))[pick], path, cols, ch)
     return (
         read_table(spark, cfg.warehouse_dir, cfg.silver_table),
         read_table(spark, cfg.warehouse_dir, cfg.rejected_table),
@@ -69,10 +88,43 @@ def run_silver(spark: SparkSession, cfg: PipelineConfig) -> tuple[DataFrame, Dat
 def run_gold(
     spark: SparkSession, cfg: PipelineConfig, computed_at: datetime | None = None
 ) -> DataFrame:
-    silver_df = read_table(spark, cfg.warehouse_dir, cfg.silver_table)
-    gold_df = G.gold_features(silver_df, computed_at)
-    overwrite_table(gold_df, cfg.warehouse_dir, cfg.gold_table,
-                    schemas.PARTITION_COLS[cfg.gold_table])
+    """Bring gold up to date with silver, one symbol partition at a
+    time, through gold's lineage record (``sources/lineage.py``).
+
+    - A silver partition that only gained files, all dated after the
+      gold partition's last date, gets its new rows' features from
+      ``gold_incremental(fresh_only=True)`` appended as new files. Both
+      dates come from parquet footer statistics. Older gold rows cannot
+      change, because every feature looks back only.
+    - Any other changed partition (a late bar, a restatement, files or a
+      record that no longer match) is rebuilt from all of its silver
+      rows: in the same ``gold_incremental`` call, with its first date
+      as the cutoff, or through ``gold_features`` when no partition
+      appends. A partition silver dropped is removed. With no record
+      every partition is rebuilt.
+
+    ``computed_at`` stamps only the rows this run computes; every other
+    gold row keeps the time its features were computed."""
+    silver, gold = Path(cfg.table_path(cfg.silver_table)), Path(cfg.table_path(cfg.gold_table))
+    ch = L.changes(silver, gold, schemas.PARTITION_COLS[cfg.gold_table])
+    for part, new in list(ch.appended.items()):
+        first = L.footer_range([ch.leaves[part] / f for f in new], "date")
+        last = L.footer_range(ch.own_files(part), "date")
+        if first is None or last is None or first[0] <= last[1]:
+            ch.rebuild(part)
+
+    def scan(paths: list[Path]) -> DataFrame:
+        return read_table(spark, cfg.warehouse_dir, cfg.silver_table, paths)
+
+    rebuilt = ch.dirs(ch.rebuilt)
+    if ch.appended:
+        gold_df = G.gold_incremental(
+            scan(ch.dirs(ch.rebuilt | ch.appended.keys())), None,
+            scan(ch.new_files() + rebuilt), computed_at, fresh_only=True,
+        )
+    else:
+        gold_df = G.gold_features(scan(rebuilt), computed_at)
+    L.publish(gold_df, gold, schemas.PARTITION_COLS[cfg.gold_table], ch)
     return read_table(spark, cfg.warehouse_dir, cfg.gold_table)
 
 

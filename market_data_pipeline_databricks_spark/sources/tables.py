@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,23 +76,48 @@ TESTDATA_TABLES = (
 )
 
 
-def read_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
-    """Scan a materialized table from the warehouse directory.
+#: explicit paths one scan lists on the driver: past
+#: ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) Spark
+#: lists a scan's paths in a job of its own
+_MAX_SCAN_PATHS = 32
+
+
+def read_table(
+    spark: SparkSession,
+    warehouse_dir: str,
+    table: str,
+    paths: list[Path] | None = None,
+) -> DataFrame:
+    """Scan a materialized table from the warehouse directory, or only
+    the partition directories and data files in ``paths``, with
+    partition values from their directories.
 
     A table with a declared schema (``schemas.TABLE_SCHEMAS``) is read
     with it, partition columns last, so the scan runs no schema-
     inference job, an empty table (no data files) reads as empty, and
     a partition value keeps its declared type: inference would read a
     symbol ``007`` back as the integer 7. Other tables are inferred.
+
+    ``paths`` are read ``_MAX_SCAN_PATHS`` to a scan, and the scans
+    unioned, so no scan lists its paths in a Spark job.
     """
     from market_data_pipeline_databricks_spark import schemas
 
     path = str(Path(warehouse_dir) / table)
+    reader = spark.read
     schema = schemas.TABLE_SCHEMAS.get(table)
-    if schema is None:
-        return spark.read.parquet(path)
-    schema = schemas.partitions_last(schema, schemas.PARTITION_COLS.get(table, []))
-    return spark.read.schema(schema).parquet(path)
+    if schema is not None:
+        schema = schemas.partitions_last(schema, schemas.PARTITION_COLS.get(table, []))
+        reader = reader.schema(schema)
+    if paths is None:
+        return reader.parquet(path)
+    if not paths:
+        return spark.createDataFrame([], schema)
+    reader = reader.option("basePath", path)
+    return reduce(DataFrame.unionByName, [
+        reader.parquet(*map(str, paths[i:i + _MAX_SCAN_PATHS]))
+        for i in range(0, len(paths), _MAX_SCAN_PATHS)
+    ])
 
 
 def testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

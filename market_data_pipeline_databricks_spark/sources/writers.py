@@ -2,11 +2,12 @@
 (SURVEY §2.1 S5-S9).
 
 The reference materializes through Delta Lake: ``MERGE INTO`` for bronze
-(reference 01_ingest_bronze.py:93-107), full overwrite for silver/gold
-(02_transform_silver.py:136-137, 03_aggregate_gold.py:82-95), append for
-the DQ log (04_data_quality_checks.py:147-156). Here a table is a
-directory of parquet files, partitioned hive-style (``col=value``
-directories), and the MERGE is :func:`upsert_by_key`.
+(reference 01_ingest_bronze.py:93-107) and append for the DQ log
+(04_data_quality_checks.py:147-156). Here a table is a directory of
+parquet files, partitioned hive-style (``col=value`` directories), and
+the MERGE is :func:`upsert_by_key`. Silver, rejected and gold follow
+their source's file changes (``sources/lineage.py``) and publish through
+:func:`_swap_staged` too.
 
 The keyed writes — :func:`upsert_by_key`, :func:`erase_keys` and
 :func:`compact_table` — share one path:
@@ -66,7 +67,8 @@ def _table_path(warehouse_dir: str, table: str) -> Path:
 def overwrite_table(
     df: DataFrame, warehouse_dir: str, table: str, partition_cols: list[str] | None = None
 ) -> None:
-    """Deterministic full rewrite (silver/gold pattern, S7/S8)."""
+    """Deterministic full rewrite (S7/S8): a new table, or one replaced
+    whole."""
     writer = df.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
@@ -302,13 +304,17 @@ def upsert_by_key(
     _swap_staged(merged, path, partition_cols, rewrite)
 
 
-def coalesce_by_bytes(frame: DataFrame, dirs: list[Path]) -> DataFrame:
+def coalesce_by_bytes(frame: DataFrame, paths: list[Path]) -> DataFrame:
     """``frame`` in one task per ``_TASK_BYTES`` of the parquet files
-    under ``dirs``, without a shuffle. A task writes one file per
+    at or under ``paths``, without a shuffle. A task writes one file per
     partition value it holds, and a scan's splits mix the files of
     every partition, so this is what keeps a rewrite of several small
     files per partition from writing as many again."""
-    nbytes = sum(f.stat().st_size for d in dirs for f in d.rglob("*.parquet"))
+    nbytes = sum(
+        f.stat().st_size
+        for p in paths
+        for f in ([p] if p.is_file() else p.rglob("*.parquet"))
+    )
     return frame.coalesce(max(1, -(-nbytes // _TASK_BYTES)))
 
 

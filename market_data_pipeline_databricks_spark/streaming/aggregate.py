@@ -292,8 +292,10 @@ def stream_agg_maintenance(
             *[F.col(f"__sum_{c}").alias(f"__ps_{c}") for c in sum_cols],
             F.col("__wm").alias("__pw"),
         )
+        # no broadcast hint: Spark cannot broadcast either side of a
+        # full outer join, and would drop the hint with a warning
         merged = cur.join(
-            F.broadcast(p), F.col(gcol).eqNullSafe(F.col("__g")), "full"
+            p, F.col(gcol).eqNullSafe(F.col("__g")), "full"
         ).select(
             F.coalesce(F.col(gcol), F.col("__g")).alias(gcol),
             (

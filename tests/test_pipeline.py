@@ -158,6 +158,21 @@ def test_multi_batch_pipeline_equals_one_run_over_final_inputs(spark, tmp_path):
 # counts of the first and second run of bronze -> silver -> gold ->
 # quality (the first bronze run creates the table; the second upserts).
 _STAGE_JOB_CEILINGS = {"bronze": 6, "silver": 2, "gold": 2, "quality": 5}
+# ... and of a third run that lands one new day per symbol: bronze,
+# silver, rejected and gold append (gold through ``gold_incremental``).
+_APPEND_JOB_CEILINGS = {"bronze": 5, "silver": 2, "gold": 5, "quality": 5}
+
+
+def _data_files(cfg) -> dict:
+    """(inode, mtime_ns) of every data file of silver, rejected and gold."""
+    from pathlib import Path
+
+    out = {}
+    for table in (cfg.silver_table, cfg.rejected_table, cfg.gold_table):
+        for f in Path(cfg.table_path(table)).rglob("*.parquet"):
+            st = f.stat()
+            out[f] = (st.st_ino, st.st_mtime_ns)
+    return out
 
 
 def test_medallion_stage_job_budget(spark, raw_dir, tmp_path):
@@ -166,15 +181,15 @@ def test_medallion_stage_job_budget(spark, raw_dir, tmp_path):
     from market_data_pipeline_databricks_spark import pipeline as P
 
     sc = spark.sparkContext
-    cfg = _cfg(raw_dir, tmp_path)
-    stages = {
-        "bronze": lambda: P.run_bronze(spark, cfg, ingested_at=RUN_TS),
-        "silver": lambda: P.run_silver(spark, cfg),
-        "gold": lambda: P.run_gold(spark, cfg, computed_at=RUN_TS),
-        "quality": lambda: P.run_quality(spark, cfg, run_ts=RUN_TS, today=TODAY),
-    }
-    got: dict[str, list[int]] = {}
-    for _ in range(2):
+
+    def jobs(cfg) -> dict[str, int]:
+        stages = {
+            "bronze": lambda: P.run_bronze(spark, cfg, ingested_at=RUN_TS),
+            "silver": lambda: P.run_silver(spark, cfg),
+            "gold": lambda: P.run_gold(spark, cfg, computed_at=RUN_TS),
+            "quality": lambda: P.run_quality(spark, cfg, run_ts=RUN_TS, today=TODAY),
+        }
+        got = {}
         for name, fn in stages.items():
             group = f"stage-budget-{uuid.uuid4().hex[:8]}"
             sc.setJobGroup(group, "medallion stage job budget")
@@ -183,10 +198,28 @@ def test_medallion_stage_job_budget(spark, raw_dir, tmp_path):
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
-            got.setdefault(name, []).append(
-                len(sc.statusTracker().getJobIdsForGroup(group))
-            )
+            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        return got
+
+    cfg = _cfg(raw_dir, tmp_path)
+    got: dict[str, list[int]] = {}
+    for _ in range(2):
+        for name, n in jobs(cfg).items():
+            got.setdefault(name, []).append(n)
     assert all(max(n) <= _STAGE_JOB_CEILINGS[k] for k, n in got.items()), got
+
+    # one new day per symbol: every earlier derived file stays as it was
+    day = TODAY + dt.timedelta(days=7)
+    _write_batch(tmp_path / "day", {
+        "SPY": {day: (101.0, 102.0, 100.0, 101.5, 5000)},
+        "EURUSD": {day: (1.10, 1.11, 1.09, 1.105, None)},
+    })
+    before = _data_files(cfg)
+    appended = jobs(cfg.with_dirs(str(tmp_path / "day"), cfg.warehouse_dir))
+    after = _data_files(cfg)
+    assert all(after.get(f) == v for f, v in before.items())
+    assert len(after) == len(before) + 4  # two silver and two gold files
+    assert all(n <= _APPEND_JOB_CEILINGS[k] for k, n in appended.items()), appended
 
 
 def test_read_table_keeps_string_partition_values(spark, tmp_path):
