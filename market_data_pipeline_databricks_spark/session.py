@@ -24,7 +24,9 @@ later sessions load the cached jar. Without ``javac`` the session falls
 back to Hadoop's ``RawLocalFileSystem``: no sidecars, but still two
 ``chmod`` forks per file. In place of the sidecars, parquet page
 checksums (which Spark writes) are verified on every read; footers are
-not covered. A non-local master keeps its cluster's filesystem.
+not covered. Streaming state files keep Spark's own ``<file>.crc``
+checksums, which are not Hadoop sidecars. A non-local master keeps its
+cluster's filesystem.
 """
 
 from __future__ import annotations
