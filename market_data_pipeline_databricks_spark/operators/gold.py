@@ -17,10 +17,15 @@ different stamps; the reference, which rebuilds gold in full, stamps
 every row with the run time.
 
 Scale: one shuffle on ``symbol`` serves all three window functions
-(Catalyst computes them in a single WindowExec over one sort). A symbol
-is a bounded daily series (≤~250 rows/yr), so per-partition memory is
-bounded regardless of total data size; skew salting is unnecessary and
-would break window ordering.
+(Catalyst computes them in a single WindowExec over one sort). When the
+input is one task, that shuffle disappears: a single partition already
+meets the window's clustering on ``symbol``, so Catalyst plans no
+Exchange. ``pipeline.run_gold`` coalesces its silver scan by bytes for
+this (``writers.coalesce_by_bytes``); past ``writers._TASK_BYTES`` it
+spans several tasks and the Exchange returns, with the same rows. A
+symbol is a bounded daily series (≤~250 rows/yr), so per-partition
+memory is bounded regardless of total data size; skew salting is
+unnecessary and would break window ordering.
 """
 
 from __future__ import annotations

@@ -20,7 +20,6 @@ run twice, or after any failure, heals its table.
 from __future__ import annotations
 
 from datetime import date, datetime
-from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,38 +91,43 @@ def run_gold(
     time, through gold's lineage record (``sources/lineage.py``).
 
     - A silver partition that only gained files, all dated after the
-      gold partition's last date, gets its new rows' features from
-      ``gold_incremental(fresh_only=True)`` appended as new files. Both
-      dates come from parquet footer statistics. Older gold rows cannot
-      change, because every feature looks back only.
+      gold partition's last date, gets the features of its new rows
+      appended as new files: rows dated from the new files' first date
+      (the cutoff) on. Both dates come from parquet footer statistics.
+      Older gold rows cannot change, because every feature looks back
+      only.
     - Any other changed partition (a late bar, a restatement, files or a
       record that no longer match) is rebuilt from all of its silver
-      rows: in the same ``gold_incremental`` call, with its first date
-      as the cutoff, or through ``gold_features`` when no partition
-      appends. A partition silver dropped is removed. With no record
-      every partition is rebuilt.
+      rows. A partition silver dropped is removed. With no record every
+      partition is rebuilt.
+
+    Both kinds are one ``gold_features`` window over the silver
+    directories of the changed partitions, and the appended partitions'
+    rows are then filtered to their cutoffs, which enter the plan as a
+    literal map keyed by symbol. The scan is coalesced by the bytes it
+    reads (``coalesce_by_bytes``): while it fits one task, the window's
+    clustering on ``symbol`` is already met, so the whole stage is one
+    Spark job with no shuffle. A larger input spreads over several tasks
+    and the window shuffles again, with the same rows.
 
     ``computed_at`` stamps only the rows this run computes; every other
     gold row keeps the time its features were computed."""
     silver, gold = Path(cfg.table_path(cfg.silver_table)), Path(cfg.table_path(cfg.gold_table))
     ch = L.changes(silver, gold, schemas.PARTITION_COLS[cfg.gold_table])
+    cutoffs = []
     for part, new in list(ch.appended.items()):
         first = L.footer_range([ch.leaves[part] / f for f in new], "date")
         last = L.footer_range(ch.own_files(part), "date")
         if first is None or last is None or first[0] <= last[1]:
             ch.rebuild(part)
-
-    def scan(paths: list[Path]) -> DataFrame:
-        return read_table(spark, cfg.warehouse_dir, cfg.silver_table, paths)
-
-    rebuilt = ch.dirs(ch.rebuilt)
-    if ch.appended:
-        gold_df = G.gold_incremental(
-            scan(ch.dirs(ch.rebuilt | ch.appended.keys())), None,
-            scan(ch.new_files() + rebuilt), computed_at, fresh_only=True,
-        )
-    else:
-        gold_df = G.gold_features(scan(rebuilt), computed_at)
+        else:
+            cutoffs += [F.lit(part[0]), F.lit(first[0])]
+    paths = ch.dirs(ch.rebuilt | ch.appended.keys())
+    src = read_table(spark, cfg.warehouse_dir, cfg.silver_table, paths)
+    gold_df = G.gold_features(coalesce_by_bytes(src, paths), computed_at)
+    if cutoffs:
+        cutoff = F.create_map(*cutoffs)[F.col("symbol")]
+        gold_df = gold_df.filter(cutoff.isNull() | (F.col("date") >= cutoff))
     L.publish(gold_df, gold, schemas.PARTITION_COLS[cfg.gold_table], ch)
     return read_table(spark, cfg.warehouse_dir, cfg.gold_table)
 
@@ -134,24 +138,30 @@ def run_quality(
     run_ts: datetime | None = None,
     today: date | None = None,
 ) -> DataFrame:
-    tables = {
-        layer: read_table(spark, cfg.warehouse_dir, name)
+    """Append the four DQ checks (``operators/quality.py``) to the DQ
+    table in one Spark job with no shuffle.
+
+    The row counts of bronze, silver and gold are summed from the
+    parquet footers of their data files on the driver
+    (``lineage.footer_rows``), with no Spark job. Silver is coalesced by
+    the bytes it reads (``coalesce_by_bytes``), so while it fits one
+    task the gap window and the staleness aggregate, both clustered on
+    ``symbol``, need no shuffle; a larger silver shuffles again, with
+    the same rows."""
+    counts = {
+        layer: L.footer_rows(Path(cfg.table_path(name)), schemas.PARTITION_COLS[name])
         for layer, name in (
             ("bronze", cfg.bronze_table),
             ("silver", cfg.silver_table),
             ("gold", cfg.gold_table),
         )
     }
-    silver_df, gold_df = tables["silver"], tables["gold"]
-    # the three row counts in one aggregate job over the union
-    tagged = reduce(DataFrame.unionByName, [
-        df.select(F.lit(layer).alias("layer")) for layer, df in tables.items()
-    ])
-    counts = tagged.agg(*[
-        F.count_if(F.col("layer") == layer).alias(layer) for layer in tables
-    ]).first().asDict()
+    silver_path = Path(cfg.table_path(cfg.silver_table))
+    silver_df = coalesce_by_bytes(
+        read_table(spark, cfg.warehouse_dir, cfg.silver_table), [silver_path]
+    )
     dq = Q.run_quality(
-        silver_df, gold_df, counts,
+        silver_df, read_table(spark, cfg.warehouse_dir, cfg.gold_table), counts,
         run_ts=run_ts, today=today, thresholds=cfg.thresholds, spark=spark,
     )
     append_table(dq, cfg.warehouse_dir, cfg.dq_table,

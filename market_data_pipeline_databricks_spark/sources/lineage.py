@@ -24,6 +24,11 @@ readable record rebuilds every partition. So a backfill, a crash
 between publish and record write, and a table another writer changed
 all heal through the same path: their partitions no longer match the
 record, and are rebuilt.
+
+Two readers of parquet footers serve the pipeline on the driver, with
+no Spark job: :func:`footer_range` (a column's min and max, gold's
+append test and cutoffs) and :func:`footer_rows` (a table's row count,
+the DQ heartbeat).
 """
 
 from __future__ import annotations
@@ -171,3 +176,15 @@ def footer_range(files: list[Path], column: str):
             lo = stats.min if lo is None else min(lo, stats.min)
             hi = stats.max if hi is None else max(hi, stats.max)
     return None if lo is None else (lo, hi)
+
+
+def footer_rows(table: Path, partition_cols: list[str]) -> int:
+    """Rows of the table at ``table``, summed from the parquet footers
+    (``num_rows``) of the data files a Spark scan of it reads: those of
+    its leaf partition directories, without ``.``/``_`` names. Read with
+    pyarrow on the driver, with no Spark job; a missing table raises
+    ``FileNotFoundError``."""
+    import pyarrow.parquet as pq
+
+    leaves = _partition_dirs(table, partition_cols).values() if partition_cols else [table]
+    return sum(pq.read_metadata(leaf / f).num_rows for leaf in leaves for f in _files(leaf))

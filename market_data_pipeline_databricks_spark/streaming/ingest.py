@@ -73,12 +73,14 @@ def stream_upsert_to_table(
 
     Scale: each micro-batch touches only the partitions its keys live
     in (see upsert_by_key); state is the checkpointed file log, never
-    data."""
+    data. A checkpoint created here is removed once the query stops; a
+    caller's ``checkpoint_dir`` is never touched."""
     from market_data_pipeline_databricks_spark.sources.writers import (
         upsert_by_key,
     )
 
-    if checkpoint_dir is None:
+    auto_checkpoint = checkpoint_dir is None
+    if auto_checkpoint:
         checkpoint_dir = tempfile.mkdtemp(prefix=f"ckpt_upsert_{table}_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -97,7 +99,11 @@ def stream_upsert_to_table(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        if auto_checkpoint:
+            shutil.rmtree(checkpoint_dir, ignore_errors=True)
 
 
 def run_available_now(
@@ -114,8 +120,13 @@ def run_available_now(
     to parquet/delta sinks with the same trigger. availableNow
     processes the backlog in (possibly many) micro-batches then stops,
     which is exactly the semantics of an incremental batch run.
+
+    A checkpoint created here is removed once the query stops: the
+    memory sink's table holds the result in the driver and does not
+    read it. A caller's ``checkpoint_dir`` is never touched.
     """
-    if checkpoint_dir is None:
+    auto_checkpoint = checkpoint_dir is None
+    if auto_checkpoint:
         checkpoint_dir = tempfile.mkdtemp(prefix=f"ckpt_{query_name}_")
     q = (
         df.writeStream.format("memory")
@@ -125,7 +136,11 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        if auto_checkpoint:
+            shutil.rmtree(checkpoint_dir, ignore_errors=True)
     return df.sparkSession.table(query_name)
 
 

@@ -5,6 +5,7 @@ equals a full recompute from its source, whichever path built it."""
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 from pathlib import Path
 
 import pytest
@@ -13,7 +14,7 @@ from market_data_pipeline_databricks_spark import pipeline as P
 from market_data_pipeline_databricks_spark.config import PipelineConfig
 from market_data_pipeline_databricks_spark.operators.gold import gold_features
 from market_data_pipeline_databricks_spark.operators.silver import split_silver
-from market_data_pipeline_databricks_spark.sources import lineage, read_table
+from market_data_pipeline_databricks_spark.sources import lineage, read_table, writers
 from market_data_pipeline_databricks_spark.sources.writers import (
     _MAX_PARTITION_FILES,
     erase_keys,
@@ -29,8 +30,6 @@ def _bar(i, scale=1.0, vol=True):
 
 
 def _write_batch(raw: Path, rows: dict) -> None:
-    import shutil
-
     shutil.rmtree(raw, ignore_errors=True)
     raw.mkdir(parents=True)
     for sym, bars in rows.items():
@@ -141,8 +140,12 @@ def test_incremental_equals_full_recompute(spark, tmp_path, monkeypatch):
     while len(list(bronze_aaa.glob("*.parquet"))) < _MAX_PARTITION_FILES:
         step({"AAA": {DAYS[i]: _bar(i)}})
         i += 1
+    live = set(bronze_aaa.glob("*.parquet"))
+    tasks = -(-sum(f.stat().st_size for f in live) // writers._TASK_BYTES)
     step({"AAA": {DAYS[i]: _bar(i)}})
-    assert len(list(bronze_aaa.glob("*.parquet"))) == 1
+    # rewritten whole, in one file per task of the rewrite
+    compacted = set(bronze_aaa.glob("*.parquet"))
+    assert 1 <= len(compacted) <= tasks and not compacted & live
     assert {s for (s, _), v in stamps.items() if v == ts} == {"AAA"}
     assert all(v == ts for (s, _), v in stamps.items() if s == "AAA")
     i += 1
@@ -166,3 +169,37 @@ def test_incremental_equals_full_recompute(spark, tmp_path, monkeypatch):
     step({"BBB": {DAYS[i + 1]: _bar(i + 1, 0.5)}})
     # silver matched no record and was rebuilt; gold rebuilt with it
     assert set(stamps.values()) == {ts}
+
+
+def test_incremental_equals_full_recompute_in_several_tasks(spark, tmp_path, monkeypatch):
+    """The same batches with every coalesced scan over several tasks:
+    gold's window and the writers' rewrites shuffle, and each table
+    still equals a full recompute."""
+    monkeypatch.setattr(writers, "_TASK_BYTES", 4096)
+    test_incremental_equals_full_recompute(spark, tmp_path, monkeypatch)
+
+
+def test_footer_rows_equal_spark_counts(spark, raw_dir, tmp_path):
+    """``lineage.footer_rows`` counts what a Spark scan of the table
+    counts: a NULL partition's rows, a partition at
+    ``_MAX_PARTITION_FILES`` files, and not the ``_``/``.`` files Spark
+    skips."""
+    cfg = PipelineConfig(raw_dir=str(raw_dir), warehouse_dir=str(tmp_path / "wh"))
+    _run(spark, cfg, T0)
+    for table in (cfg.bronze_table, cfg.silver_table, cfg.gold_table):
+        root = Path(cfg.table_path(table))
+        leaf = root / "symbol=SPY"
+        data = sorted(leaf.glob("part-*"))
+        null_leaf = root / "symbol=__HIVE_DEFAULT_PARTITION__"
+        null_leaf.mkdir()
+        shutil.copy(data[0], null_leaf / data[0].name)
+        shutil.copy(data[0], leaf / "_skipped.parquet")
+        shutil.copy(data[0], leaf / ".skipped.parquet")
+        for i in range(len(data), _MAX_PARTITION_FILES):
+            shutil.copy(data[0], leaf / f"part-copy-{i}.parquet")
+        assert len(list(leaf.glob("part-*"))) == _MAX_PARTITION_FILES
+        rows = read_table(spark, cfg.warehouse_dir, table)
+        assert rows.filter("symbol IS NULL").count() > 0
+        assert lineage.footer_rows(root, ["symbol"]) == rows.count(), table
+    with pytest.raises(FileNotFoundError):
+        lineage.footer_rows(tmp_path / "wh" / "missing", ["symbol"])

@@ -157,10 +157,10 @@ def test_multi_batch_pipeline_equals_one_run_over_final_inputs(spark, tmp_path):
 # Spark jobs per medallion stage on the fixture CSVs, as ceilings: the
 # counts of the first and second run of bronze -> silver -> gold ->
 # quality (the first bronze run creates the table; the second upserts).
-_STAGE_JOB_CEILINGS = {"bronze": 6, "silver": 2, "gold": 2, "quality": 5}
+_STAGE_JOB_CEILINGS = {"bronze": 6, "silver": 2, "gold": 1, "quality": 1}
 # ... and of a third run that lands one new day per symbol: bronze,
-# silver, rejected and gold append (gold through ``gold_incremental``).
-_APPEND_JOB_CEILINGS = {"bronze": 5, "silver": 2, "gold": 5, "quality": 5}
+# silver, rejected and gold append.
+_APPEND_JOB_CEILINGS = {"bronze": 5, "silver": 2, "gold": 1, "quality": 1}
 
 
 def _data_files(cfg) -> dict:
@@ -220,6 +220,37 @@ def test_medallion_stage_job_budget(spark, raw_dir, tmp_path):
     assert all(after.get(f) == v for f, v in before.items())
     assert len(after) == len(before) + 4  # two silver and two gold files
     assert all(n <= _APPEND_JOB_CEILINGS[k] for k, n in appended.items()), appended
+
+
+def test_gold_and_quality_shuffle_only_past_one_task(spark, raw_dir, tmp_path, monkeypatch):
+    """Gold and quality plan no Exchange while their input fits one task
+    (``writers._TASK_BYTES``). Past it they shuffle, and a multi-batch
+    run still equals one run over the final inputs."""
+    from market_data_pipeline_databricks_spark import pipeline as P
+    from market_data_pipeline_databricks_spark.sources import lineage, writers
+
+    plans: dict[str, str] = {}
+
+    def spy(stage, write):
+        def record(frame, *args):
+            plans[stage] = frame._jdf.queryExecution().executedPlan().toString()
+            return write(frame, *args)
+        return record
+
+    def gold_and_quality(cfg) -> dict[str, bool]:
+        P.run_bronze(spark, cfg, ingested_at=RUN_TS)
+        P.run_silver(spark, cfg)
+        with monkeypatch.context() as m:
+            m.setattr(lineage, "publish", spy("gold", lineage.publish))
+            m.setattr(P, "append_table", spy("quality", P.append_table))
+            P.run_gold(spark, cfg, computed_at=RUN_TS)
+            P.run_quality(spark, cfg, run_ts=RUN_TS, today=TODAY)
+        return {stage: "Exchange" in plan for stage, plan in plans.items()}
+
+    assert gold_and_quality(_cfg(raw_dir, tmp_path / "one")) == {"gold": False, "quality": False}
+    monkeypatch.setattr(writers, "_TASK_BYTES", 4096)
+    assert gold_and_quality(_cfg(raw_dir, tmp_path / "many")) == {"gold": True, "quality": True}
+    test_multi_batch_pipeline_equals_one_run_over_final_inputs(spark, tmp_path / "batches")
 
 
 def test_read_table_keeps_string_partition_values(spark, tmp_path):

@@ -120,6 +120,36 @@ def test_stream_upsert_foreachbatch_idempotent(spark, tmp_path):
     assert by_key[("SPY", dt.date(2025, 10, 1))][5] == 100.5
 
 
+def test_auto_checkpoints_are_removed(spark, raw_dir, tmp_path, monkeypatch):
+    """A checkpoint the stream helpers create themselves is gone once
+    the query stops, and the memory sink's table still reads; a
+    caller's checkpoint stays."""
+    import tempfile
+
+    from market_data_pipeline_databricks_spark.streaming.ingest import (
+        stream_upsert_to_table,
+    )
+
+    temp = tmp_path / "tmp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+    cols = ["symbol", "date", "close"]
+    stream = read_price_csv_stream(spark, str(raw_dir), source="test")
+    got = run_available_now(stream, "t_auto_ckpt", output_mode="append")
+    stream_upsert_to_table(
+        read_price_csv_stream(spark, str(raw_dir), source="test"),
+        str(tmp_path / "wh"), "bronze_auto", key_cols=["symbol", "date"],
+        partition_cols=["symbol"],
+    )
+    assert not list(temp.glob("ckpt_*"))
+    batch = normalize_raw(read_prices_csv(spark, str(raw_dir)), source="test")
+    assert _rows(got, cols) == _rows(batch, cols)
+
+    mine = tmp_path / "mine"
+    run_available_now(stream, "t_own_ckpt", output_mode="append", checkpoint_dir=str(mine))
+    assert (mine / "commits").is_dir()
+
+
 def test_nanos_stream_path_scoped_conf(spark, tmp_path):
     """Exercise the TIMESTAMP(NANOS) branch end-to-end: a nanos-encoded
     events parquet streams through tumbling_daily_counts inside
